@@ -25,6 +25,7 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.writers import write_partitioned_parquet
 from .balance import spread_small_input
 
 logger = logging.getLogger(__name__)
@@ -1687,15 +1688,18 @@ def ivfpq_write_index(
 ) -> None:
     """Materialize the IVF-PQ index in its PRODUCTION layout: encode
     once (:func:`ivfpq_encode`), write parquet partitioned by
-    ``cluster_id`` — each coarse cell becomes a directory, the
-    inverted-list analog.  Searches then read m code bytes per row
+    ``cluster_id`` through the shared rebalancing sink — each coarse
+    cell becomes a directory holding one file, the inverted-list
+    analog.  Searches then read m code bytes per row
     from ONLY the probed directories; the embedding column is never
     scanned again.  Encode cost is paid once per index build, not
     per query batch — the shape :func:`ivfpq_adc_knn`'s in-scan
     encode documents as its 100 TB successor."""
-    ivfpq_encode(df, id_col, emb_col, coarse, codebooks).write.mode(
-        "overwrite"
-    ).partitionBy("cluster_id").parquet(path)
+    write_partitioned_parquet(
+        ivfpq_encode(df, id_col, emb_col, coarse, codebooks),
+        path,
+        ("cluster_id",),
+    )
 
 
 def ivfpq_compact_index(spark, src_path: str, dst_path: str) -> None:
@@ -1710,20 +1714,15 @@ def ivfpq_compact_index(spark, src_path: str, dst_path: str) -> None:
     one file per (epoch, cluster) — searchable immediately, but
     listing-dominated over time (the reference's file-per-record sink
     pathology in slow motion, consumer.py:66-77).  Compaction drops
-    the epoch column and rewrites with ``repartition(cluster_id)``,
-    so each cluster directory collapses to one file per owning task —
-    O(clusters) files total, and :func:`ivfpq_adc_knn_stored`'s
-    partition pruning sees the identical row set before and after
-    (test-pinned)."""
+    the epoch column and rewrites through the shared rebalancing
+    partitioned sink, so each cluster directory collapses to one file
+    (a hot cluster splits into files of AQE's advisory size instead of
+    landing on one task) — O(clusters) files total, and
+    :func:`ivfpq_adc_knn_stored`'s partition pruning sees the identical
+    row set before and after (test-pinned)."""
     df = spark.read.parquet(src_path)
     cols = [c for c in df.columns if c != "epoch"]
-    (
-        df.select(*cols)
-        .repartition("cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(dst_path)
-    )
+    write_partitioned_parquet(df.select(*cols), dst_path, ("cluster_id",))
 
 
 def ivfpq_adc_knn_stored(

@@ -5,7 +5,9 @@
 - S12 bounded CSV export at the serving edge (``dashboard.py:361-367``)
 
 Scale notes: the partitioned parquet write is the fact-table path —
-dynamic partition dirs, never coalesced.  ``coalesce(1)`` is reserved
+dynamic partition dirs, rebalanced by the partition columns so each
+directory gets one file (where AQE is on, a hot key splits into files
+of advisory size), never coalesced.  ``coalesce(1)`` is reserved
 for the *summary* table (a few hundred rows) exactly as the reference
 does; putting it on a fact table serializes the job onto one task.
 """
@@ -26,14 +28,32 @@ def write_partitioned_parquet(
     (spark_processor.py:204) so later per-location / per-date predicates
     prune whole directories at 100 TB.
 
+    With ``partition_cols`` the write adds one shuffle: a ``rebalance``
+    hint on the partition columns.  Without it every write task would
+    open a file in every directory it holds rows for (tasks x
+    directories small files, each re-opened by every later scan).  Hash
+    placement keeps each partition value in one reducer, so a directory
+    gets one file; AQE may coalesce several reducers into one task,
+    which still writes one file per directory.  Skew splitting applies
+    only where AQE is enabled (the engine's sessions): there
+    ``OptimizeSkewInRebalancePartitions`` splits a hot value into files
+    of advisory size.  With AQE off the hint is a plain hash
+    repartition over ``spark.sql.shuffle.partitions`` and a hot value
+    lands on one task, as with ``repartition(*partition_cols)``.
+
     ``sort_cols`` additionally sorts rows WITHIN each write task
-    (``sortWithinPartitions`` — no extra shuffle): parquet then gets
+    (``sortWithinPartitions`` — no second shuffle): parquet then gets
     tight per-row-group min/max stats on those columns, so point/range
     predicates skip row groups inside the files that directory pruning
     can't skip.  Sort by the columns your queries filter on most (e.g.
-    the event timestamp)."""
+    the event timestamp).  The sort leads with the partition columns:
+    the planned write needs that order anyway, so it adds no sort of
+    its own — which would otherwise replace this one and leave the
+    files unsorted."""
+    if partition_cols:
+        df = df.hint("rebalance", *partition_cols)
     if sort_cols:
-        df = df.sortWithinPartitions(*sort_cols)
+        df = df.sortWithinPartitions(*partition_cols, *sort_cols)
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 

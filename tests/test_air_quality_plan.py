@@ -79,6 +79,9 @@ def test_run_batch_job_end_to_end(spark, tmp_path):
     # S10: partition directory layout location=.../year=.../month=...
     parts = glob.glob(f"{out_dir}/processed/location=*/year=*/month=*")
     assert parts, "partitioned parquet layout missing"
+    # the sink rebalances by its partition columns: one file per directory
+    for part in parts:
+        assert len(glob.glob(f"{part}/*.parquet")) == 1, part
     reread = spark.read.parquet(f"{out_dir}/processed")
     assert reread.count() == clean_and_transform(df).count()
     # S11: exactly one CSV part file with header

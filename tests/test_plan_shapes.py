@@ -407,6 +407,55 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     assert q.count() == n_match
 
 
+def last_executed_plan(spark) -> str:
+    """Formatted AQE-final physical plan of the session's latest SQL
+    execution — the only place a ``df.write`` plan is visible."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).physicalPlanDescription()
+
+
+def executed_exchange_args(p: str) -> list[str]:
+    """``Arguments:`` line of every Exchange in the executed (AQE
+    current) part of a formatted plan, leaving out the initial plan."""
+    import re
+
+    tree = p.split("== Initial Plan ==")[0]
+    ids = re.findall(r"Exchange \((\d+)\)", tree)
+    return [
+        re.search(rf"\({i}\) Exchange\n.*\nArguments: (.*)", p).group(1)
+        for i in ids
+    ]
+
+
+def test_partitioned_write_one_rebalance_exchange(spark, sf_dir, tmp_path):
+    """The S10 sink runs exactly ONE shuffle: a rebalance keyed on the
+    partition columns (one file per directory at small scale, AQE skew
+    splitting at 100 TB).  ``sort_cols`` sorts inside the write tasks
+    and adds no second exchange; an unpartitioned write shuffles
+    nothing."""
+    import re
+
+    from etl_based_real_time_air_quality_monitoring_system_spark.sources.writers import write_partitioned_parquet
+
+    events = load_table(spark, sf_dir, "events")
+    for sort_cols in ((), ("ts",)):
+        write_partitioned_parquet(
+            events,
+            str(tmp_path / f"by_type{len(sort_cols)}"),
+            partition_cols=("event_type",),
+            sort_cols=sort_cols,
+        )
+        args = executed_exchange_args(last_executed_plan(spark))
+        assert len(args) == 1, args
+        assert re.match(
+            r"hashpartitioning\(event_type#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL",
+            args[0],
+        ), args
+    write_partitioned_parquet(events, str(tmp_path / "flat"), partition_cols=())
+    assert executed_exchange_args(last_executed_plan(spark)) == []
+
+
 def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
     # 100 TB semi-join reduction: when a selective dim side feeds a
     # shuffle join, Spark can build a bloom filter from the dim keys

@@ -119,24 +119,29 @@ def test_register_views_sql_surface(spark, sf_dir):
 
 def test_partitioned_write_sort_within_partitions(spark, sf_dir, tmp_path):
     """sort_cols must cluster rows inside each parquet file (tight
-    min/max row-group stats for skipping) without adding a shuffle."""
+    min/max row-group stats for skipping) without a second shuffle.
+    The fixture file is already in ts order, so a shuffled copy spread
+    over several partitions is written too."""
     from etl_based_real_time_air_quality_monitoring_system_spark.sources.readers import load_table
     from etl_based_real_time_air_quality_monitoring_system_spark.sources.writers import write_partitioned_parquet
 
-    events = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "sorted_events")
-    write_partitioned_parquet(
-        events, out, partition_cols=("event_type",), sort_cols=("ts",)
-    )
+    events = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
+    shuffled = spark.createDataFrame(events.toPandas().sample(frac=1, random_state=0))
+    assert shuffled.rdd.getNumPartitions() > 1
     import glob
 
     import pyarrow.parquet as pq
 
-    files = glob.glob(f"{out}/*/*.parquet")
-    assert files
-    for f in files[:4]:
-        ts = pq.read_table(f, columns=["ts"])["ts"].to_pylist()
-        assert ts == sorted(ts), f"rows not ts-sorted within {f}"
+    for name, df in (("events", events), ("shuffled", shuffled)):
+        out = str(tmp_path / name)
+        write_partitioned_parquet(
+            df, out, partition_cols=("event_type",), sort_cols=("ts",)
+        )
+        files = glob.glob(f"{out}/*/*.parquet")
+        assert files
+        for f in files:
+            ts = pq.read_table(f, columns=["ts"])["ts"].to_pylist()
+            assert ts == sorted(ts), f"rows not ts-sorted within {f}"
 
 
 def test_write_training_shards_deterministic_order(spark, sf_dir, tmp_path):
