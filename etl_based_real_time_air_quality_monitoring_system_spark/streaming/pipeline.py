@@ -6,8 +6,9 @@ Reference semantics -> Spark mapping implemented here:
 - T1 micro-batch ingestion (``consumer.py:143-166`` 5 s poll) ->
   ``trigger(processingTime="5 seconds")``
 - T3 at-least-once + replay (``consumer.py:50-52,169``)        ->
-  checkpointed ``foreachBatch`` with an idempotent parquet sink
-  (exactly-once-ish upgrade; at-least-once is the floor)
+  checkpointed ``foreachBatch`` appending parquet — at-least-once,
+  like the reference: an epoch interrupted after its files land but
+  before its offsets commit is appended again on restart
 - T4 three timestamps per record (``producer.py:77,81``,
   ``consumer.py:98``) -> event time ``ts`` + ``processed_timestamp``
   stamped in ``enrich``
@@ -46,6 +47,10 @@ from pyspark.sql.streaming import StreamingQuery
 #: default cadence ≙ the reference's 5 s poll (consumer.py:143)
 DEFAULT_TRIGGER = "5 seconds"
 
+#: bytes one file-scan task reads: Spark's default
+#: ``spark.sql.files.maxPartitionBytes``, which the engine never changes
+SCAN_TASK_BYTES = 128 * 1024 * 1024
+
 
 def rate_source(spark: SparkSession, rows_per_second: int = 1) -> DataFrame:
     """T2 — synthetic cadence source (≙ the producer's 10 s emit loop,
@@ -78,16 +83,33 @@ def with_ingest_metrics(df: DataFrame, name="ingest") -> DataFrame:
 
 
 def stream_json_records(
-    spark: SparkSession, path: str, schema: T.StructType, max_files_per_trigger: int = 10
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream of JSON records under an explicit schema —
     the test/dev stand-in for the Kafka source (same downstream plan).
-    ``maxFilesPerTrigger`` bounds micro-batch size (backpressure)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(path)
-    )
+
+    By default a micro-batch admits new files up to
+    ``maxBytesPerTrigger = defaultParallelism x SCAN_TASK_BYTES``: one
+    wave of full-size scan tasks.  A backlog (a restart from
+    ``earliest``, consumer.py:50-52) then drains in as few epochs as the
+    cores can scan at once, instead of waiting a trigger interval per
+    fixed file count, while an epoch after a long outage still stays one
+    wave wide, which bounds its state growth.
+
+    Pass ``max_files_per_trigger`` to cap each epoch by file count
+    instead (Spark rejects both options together) — for a deterministic
+    split, e.g. ``1`` so each file is its own micro-batch."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is None:
+        reader = reader.option(
+            "maxBytesPerTrigger", spark.sparkContext.defaultParallelism * SCAN_TASK_BYTES
+        )
+    else:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(path)
 
 
 def dead_letter_split(
@@ -311,16 +333,17 @@ def run_to_partitioned_parquet(
     available_now: bool = False,
 ) -> StreamingQuery:
     """T8 — one streaming query appending partitioned parquet per
-    micro-batch via ``foreachBatch`` (idempotent per epoch thanks to
-    the checkpoint), replacing the reference's file-per-record sink +
-    separate re-read-everything batch job (consumer.py:66-77 +
-    spark_processor.py:59-64)."""
+    micro-batch via ``foreachBatch``, replacing the reference's
+    file-per-record sink + separate re-read-everything batch job
+    (consumer.py:66-77 + spark_processor.py:59-64).
+
+    Delivery is at-least-once: the checkpoint stops a restart from
+    re-reading committed epochs, but a plain append is not idempotent,
+    so an epoch interrupted after its files land and before its offsets
+    commit is appended again on restart."""
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        writer = batch.write.mode("append")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(out_path)
+        batch.write.mode("append").partitionBy(*partition_cols).parquet(out_path)
 
     stream = df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint

@@ -177,6 +177,25 @@ def test_checkpointed_parquet_sink_idempotent_restart(spark, tmp_path):
     assert spark.read.parquet(out).count() == 10
 
 
+@pytest.mark.parametrize("max_files, epochs", [(None, [12 * 3]), (5, [15, 15, 6])])
+def test_stream_admission_by_bytes_or_file_cap(spark, tmp_path, max_files, epochs):
+    """A backlog of 12 small files lands in ONE epoch under the default
+    bytes bound; an explicit file cap of 5 splits it 5 + 5 + 2 files."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(12):
+        _write_jsonl(src / f"f{i:02d}.json", _rows(0, i, 3, base_id=10 * i))
+    stream = stream_json_records(spark, str(src), EVENT_SCHEMA, max_files_per_trigger=max_files)
+    q = run_to_partitioned_parquet(
+        stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), available_now=True
+    )
+    q.awaitTermination(120)
+    rows = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
+    q.stop()
+    assert rows == epochs
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 12 * 3
+
+
 def test_stateful_running_stats_across_batches(spark, tmp_path):
     from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import stateful_running_stats
 
