@@ -90,6 +90,7 @@ from etl_based_real_time_air_quality_monitoring_system_spark.operators.similarit
     nn_label_confusion,
 )
 from etl_based_real_time_air_quality_monitoring_system_spark.operators.text import (
+    LANG_MARKERS,
     STOPWORDS,
     bpe_ish_token_count,
     char_count,
@@ -883,6 +884,17 @@ def _q_part_type_revenue(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _value_sum(round_to: int | None = None) -> Column:
+    """``value_sum``: the decimal sum of ``value`` as a double,
+    optionally rounded.  Decimal arithmetic is exact and associative,
+    so it matches the oracle's for any grouping (a float sum depends
+    on the summation order)."""
+    total = F.sum(F.col("value").cast("decimal(20,6)"))
+    if round_to is not None:
+        total = F.round(total, round_to)
+    return total.cast("double").alias("value_sum")
+
+
 def _events_file_stream(spark: SparkSession, sf: str) -> DataFrame:
     """Structured-Streaming file source over the events table (file
     streaming sources require a DIRECTORY; expose the single parquet
@@ -908,6 +920,22 @@ def _events_file_stream(spark: SparkSession, sf: str) -> DataFrame:
     return stream
 
 
+def _drain_to_memory(
+    stream: DataFrame, sink: str, mode: str = "complete"
+) -> DataFrame:
+    """Run ``stream`` over all available input (availableNow) into the
+    in-memory table ``sink`` and return that table."""
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream.sparkSession.table(sink)
+
+
 def _q_streaming_hourly_counts(spark: SparkSession, sf: str) -> DataFrame:
     # an ACTUAL Structured Streaming run inside the correctness gate:
     # file-source stream over events.parquet -> tumbling 1 h window per
@@ -931,21 +959,10 @@ def _q_streaming_hourly_counts(spark: SparkSession, sf: str) -> DataFrame:
         window="1 hour",
         aggs=[
             F.count("*").alias("record_count"),
-            F.round(F.sum(F.col("value").cast("decimal(20,6)")), 2)
-            .cast("double")
-            .alias("value_sum"),
+            _value_sum(2),
         ],
     )
-    sink = "streaming_hourly_counts_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(agg, "streaming_hourly_counts_sink")
 
 
 def _q_streaming_stateful_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -965,23 +982,14 @@ def _q_streaming_stateful_stats(spark: SparkSession, sf: str) -> DataFrame:
         "value_micros", (F.col("value") * 1_000_000).cast("long")
     )
     stats = stateful_running_sum_exact(stream, key="event_type")
-    sink = "streaming_stateful_stats_sink"
-    q = (
-        stats.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    emitted = _drain_to_memory(stats, "streaming_stateful_stats_sink", "update")
     # recover the FINAL state per key from the update-mode emission
     # stream: record_count is monotone unconditionally (it only ever
     # increments), so max_by picks the last emission's sum — unlike
     # max(value_sum_micros), which would pick an intermediate sum if
     # values were negative and the source split into many micro-batches
     return (
-        spark.table(sink)
-        .groupBy("key")
+        emitted.groupBy("key")
         .agg(
             F.max("record_count").alias("record_count"),
             F.max_by("value_sum_micros", "record_count").alias("value_sum_micros"),
@@ -1016,16 +1024,7 @@ def _q_streaming_enriched_counts(spark: SparkSession, sf: str) -> DataFrame:
         F.count("*").alias("record_count"),
         F.sum("value_micros").alias("value_sum_micros"),
     )
-    sink = "streaming_enriched_counts_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(agg, "streaming_enriched_counts_sink")
 
 
 def _q_streaming_dedup_keys(spark: SparkSession, sf: str) -> DataFrame:
@@ -1040,16 +1039,22 @@ def _q_streaming_dedup_keys(spark: SparkSession, sf: str) -> DataFrame:
     deduped = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    sink = "streaming_dedup_keys_sink"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_memory(deduped, "streaming_dedup_keys_sink", "append")
+
+
+def _user_session_stats(events: DataFrame) -> DataFrame:
+    """Per-user session windows (30-minute gap): event count and
+    value sum per session."""
+    return session_window_agg(
+        events,
+        key="user_id",
+        ts="ts",
+        gap="30 minutes",
+        aggs=[
+            F.count("*").alias("event_count"),
+            _value_sum(2),
+        ],
     )
-    q.awaitTermination()
-    return spark.table(sink)
 
 
 def _q_streaming_session_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -1058,28 +1063,8 @@ def _q_streaming_session_stats(spark: SparkSession, sf: str) -> DataFrame:
     # micro-batch split, so it equals the batch session_window
     # aggregation and shares its island-SQL oracle.
     stream = _events_file_stream(spark, sf)
-    agg = session_window_agg(
-        stream,
-        key="user_id",
-        ts="ts",
-        gap="30 minutes",
-        aggs=[
-            F.count("*").alias("event_count"),
-            F.round(F.sum(F.col("value").cast("decimal(20,6)")), 2)
-            .cast("double")
-            .alias("value_sum"),
-        ],
-    )
-    sink = "streaming_session_stats_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    agg = _user_session_stats(stream)
+    return _drain_to_memory(agg, "streaming_session_stats_sink")
 
 
 def _q_streaming_click_purchase(spark: SparkSession, sf: str) -> DataFrame:
@@ -1112,16 +1097,7 @@ def _q_streaming_click_purchase(spark: SparkSession, sf: str) -> DataFrame:
         F.col("l.click_id").alias("click_id"),
         F.col("r.purchase_id").alias("purchase_id"),
     )
-    sink = "streaming_click_purchase_sink"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(joined, "streaming_click_purchase_sink", "append")
 
 
 def _q_session_window_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -1131,18 +1107,18 @@ def _q_session_window_stats(spark: SparkSession, sf: str) -> DataFrame:
     # against the ANSI lag-boundary island SQL.  Touching intervals
     # merge (verified: events exactly `gap` apart share a session).
     events = load_table(spark, sf, "events")
-    return session_window_agg(
-        events,
-        key="user_id",
-        ts="ts",
-        gap="30 minutes",
-        aggs=[
-            F.count("*").alias("event_count"),
-            F.round(F.sum(F.col("value").cast("decimal(20,6)")), 2)
-            .cast("double")
-            .alias("value_sum"),
-        ],
-    )
+    return _user_session_stats(events)
+
+
+#: plain ANSI SQL, so Spark runs the same text its oracle does
+_ABOVE_AVG_CUSTOMERS_SQL = """
+        SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
+        FROM customer c
+        WHERE c.c_acctbal > (
+            SELECT avg(c2.c_acctbal) FROM customer c2
+            WHERE c2.c_nationkey = c.c_nationkey
+        )
+        """
 
 
 def _q_above_avg_customers(spark: SparkSession, sf: str) -> DataFrame:
@@ -1153,16 +1129,7 @@ def _q_above_avg_customers(spark: SparkSession, sf: str) -> DataFrame:
     from etl_based_real_time_air_quality_monitoring_system_spark.sources.readers import register_views
 
     register_views(spark, sf, names=("customer",))
-    return spark.sql(
-        """
-        SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
-        FROM customer c
-        WHERE c.c_acctbal > (
-            SELECT avg(c2.c_acctbal) FROM customer c2
-            WHERE c2.c_nationkey = c.c_nationkey
-        )
-        """
-    )
+    return spark.sql(_ABOVE_AVG_CUSTOMERS_SQL)
 
 
 # ---------------------------------------- LLM-data-pipeline extensions
@@ -1266,6 +1233,81 @@ def _cdc_update_schema(with_value: bool = True) -> T.StructType:
     return T.StructType(fields)
 
 
+def _cdc_updates(events: DataFrame, with_value: bool = True) -> DataFrame:
+    """The events log re-cast as a CDC log of versioned keyed updates
+    (``version`` = event_id, 'error' events are tombstones), in the
+    field order of :func:`_cdc_update_schema`."""
+    value = ["value"] if with_value else []
+    return events.select(
+        "user_id",
+        F.col("event_id").alias("version"),
+        *value,
+        (F.col("event_type") == "error").alias("_deleted"),
+    )
+
+
+def _cdc_apply_files(
+    spark: SparkSession,
+    src: str,
+    snap: str,
+    ck: str,
+    with_value: bool = True,
+    **merge_opts,
+) -> None:
+    """Stream the update files under ``src`` one file per micro-batch
+    through the version-guarded merge (``run_cdc_apply``, extra options
+    passed on) onto the snapshot ``snap``."""
+    from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import (
+        run_cdc_apply,
+        stream_json_records,
+    )
+
+    schema = _cdc_update_schema(with_value)
+    stream = stream_json_records(spark, src, schema, max_files_per_trigger=1)
+    run_cdc_apply(
+        stream,
+        snap,
+        ck,
+        key="user_id",
+        version_col="version",
+        **merge_opts,
+    ).awaitTermination()
+
+
+def _cdc_apply_epochs(spark: SparkSession, sf: str, root: str) -> None:
+    """Rebuild ``root``/snap anew with four retained generations:
+    the updates arrive as four mtime-ordered files, one micro-batch
+    each, where batch b holds the updates with version % 4 == b (so
+    batch membership is SQL-derivable)."""
+    import glob as _glob
+    import shutil as _shutil
+
+    updates = _cdc_updates(load_table(spark, sf, "events"))
+    _shutil.rmtree(root, ignore_errors=True)
+    src = os.path.join(root, "src")
+    os.makedirs(src)
+    for b in range(4):
+        part_dir = os.path.join(root, f"part{b}")
+        (
+            updates.filter(F.col("version") % 4 == b)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .json(part_dir)
+        )
+        (part_file,) = _glob.glob(os.path.join(part_dir, "part-*.json"))
+        dst = os.path.join(src, f"b{b}.json")
+        os.replace(part_file, dst)
+        t0 = os.path.getmtime(os.path.join(src, "b0.json"))
+        os.utime(dst, (t0 + 10 * b, t0 + 10 * b))
+    _cdc_apply_files(
+        spark,
+        src,
+        os.path.join(root, "snap"),
+        os.path.join(root, "ck"),
+        keep_generations=4,
+    )
+
+
 def _q_sink_sharded_export(spark: SparkSession, sf: str) -> DataFrame:
     # training-shard export round trip: deterministic shard membership
     # (content-hash bucket) proven by per-shard count + id checksum +
@@ -1306,9 +1348,7 @@ def _q_sink_partitioned_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
     return back.groupBy("event_type").agg(
         F.count("*").alias("record_count"),
-        F.sum(F.col("value").cast("decimal(20,6)"))
-        .cast("double")
-        .alias("value_sum"),
+        _value_sum(),
     )
 
 
@@ -1572,17 +1612,9 @@ def _q_streaming_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
     # event is a tombstone.
     from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import (
         read_cdc_snapshot,
-        run_cdc_apply,
-        stream_json_records,
     )
 
-    events = load_table(spark, sf, "events")
-    updates = events.select(
-        "user_id",
-        F.col("event_id").alias("version"),
-        "value",
-        (F.col("event_type") == "error").alias("_deleted"),
-    )
+    updates = _cdc_updates(load_table(spark, sf, "events"))
     st = os.stat(os.path.join(sf, "events.parquet"))
     tag = f"{sf.strip('/').replace('/', '_')}_{st.st_size}_{st.st_mtime_ns}"
     src = _gate_sink(sf, f"cdc_updates_{tag}")
@@ -1592,10 +1624,7 @@ def _q_streaming_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
     # repartitioning scatters versions across batches, exercising the
     # out-of-order path every run
     updates.repartition(4).write.mode("overwrite").json(src)
-    schema = _cdc_update_schema()
-    stream = stream_json_records(spark, src, schema, max_files_per_trigger=1)
-    q = run_cdc_apply(stream, snap, ck, key="user_id", version_col="version")
-    q.awaitTermination()
+    _cdc_apply_files(spark, src, snap, ck)
     return read_cdc_snapshot(spark, snap, delete_col="_deleted")
 
 
@@ -1704,50 +1733,12 @@ def _q_cdc_time_travel(spark: SparkSession, sf: str) -> DataFrame:
     # version-guarded merge — the oracle re-derives BOTH the latest
     # and the historical snapshot from the version rule, live rows
     # value-for-value.
-    import glob as _glob
-    import shutil as _shutil
-
     from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import (
         read_cdc_snapshot,
-        run_cdc_apply,
-        stream_json_records,
     )
 
-    events = load_table(spark, sf, "events")
-    updates = events.select(
-        "user_id",
-        F.col("event_id").alias("version"),
-        "value",
-        (F.col("event_type") == "error").alias("_deleted"),
-    )
     root = _gate_sink(sf, "cdc_tt")
-    _shutil.rmtree(root, ignore_errors=True)
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    for b in range(4):
-        part_dir = os.path.join(root, f"part{b}")
-        (
-            updates.filter(F.col("version") % 4 == b)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(part_dir)
-        )
-        (part_file,) = _glob.glob(os.path.join(part_dir, "part-*.json"))
-        dst = os.path.join(src, f"b{b}.json")
-        os.replace(part_file, dst)
-        t0 = os.path.getmtime(os.path.join(src, "b0.json"))
-        os.utime(dst, (t0 + 10 * b, t0 + 10 * b))
-    schema = _cdc_update_schema()
-    stream = stream_json_records(spark, src, schema, max_files_per_trigger=1)
-    q = run_cdc_apply(
-        stream,
-        os.path.join(root, "snap"),
-        os.path.join(root, "ck"),
-        key="user_id",
-        version_col="version",
-        keep_generations=4,
-    )
-    q.awaitTermination()
+    _cdc_apply_epochs(spark, sf, root)
     latest = read_cdc_snapshot(spark, os.path.join(root, "snap"), "_deleted")
     asof = read_cdc_snapshot(
         spark, os.path.join(root, "snap"), "_deleted", asof_epoch=1
@@ -1771,52 +1762,14 @@ def _q_cdc_vacuum(spark: SparkSession, sf: str) -> DataFrame:
     # drifting to another generation) changes the post rows and fails
     # rows+hash.  The fail-fast path for out-of-retention reads is
     # pytest-pinned (vacuum_cdc_snapshots tests).
-    import glob as _glob
-    import shutil as _shutil
-
     from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import (
         read_cdc_snapshot,
-        run_cdc_apply,
-        stream_json_records,
         vacuum_cdc_snapshots,
     )
 
-    events = load_table(spark, sf, "events")
-    updates = events.select(
-        "user_id",
-        F.col("event_id").alias("version"),
-        "value",
-        (F.col("event_type") == "error").alias("_deleted"),
-    )
     root = _gate_sink(sf, "cdc_vac")
-    _shutil.rmtree(root, ignore_errors=True)
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    for b in range(4):
-        part_dir = os.path.join(root, f"part{b}")
-        (
-            updates.filter(F.col("version") % 4 == b)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(part_dir)
-        )
-        (part_file,) = _glob.glob(os.path.join(part_dir, "part-*.json"))
-        dst = os.path.join(src, f"b{b}.json")
-        os.replace(part_file, dst)
-        t0 = os.path.getmtime(os.path.join(src, "b0.json"))
-        os.utime(dst, (t0 + 10 * b, t0 + 10 * b))
-    schema = _cdc_update_schema()
-    stream = stream_json_records(spark, src, schema, max_files_per_trigger=1)
+    _cdc_apply_epochs(spark, sf, root)
     snap = os.path.join(root, "snap")
-    q = run_cdc_apply(
-        stream,
-        snap,
-        os.path.join(root, "ck"),
-        key="user_id",
-        version_col="version",
-        keep_generations=4,
-    )
-    q.awaitTermination()
 
     def reads(phase: str) -> DataFrame:
         latest = read_cdc_snapshot(spark, snap, "_deleted")
@@ -1863,32 +1816,23 @@ def _q_funnel_over_cdc(spark: SparkSession, sf: str) -> DataFrame:
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.funnel import funnel_stages
     from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import (
         read_cdc_snapshot,
-        run_cdc_apply,
-        stream_json_records,
     )
 
     events = load_table(spark, sf, "events")
-    updates = events.select(
-        "user_id",
-        F.col("event_id").alias("version"),
-        (F.col("event_type") == "error").alias("_deleted"),
-    )
+    updates = _cdc_updates(events, with_value=False)
     root = _gate_sink(sf, "funnel_cdc")
     _shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
     # order-independent by design (version guard), so a plain hash
     # scatter into 4 files / 4 micro-batches suffices here
     updates.repartition(4).write.mode("overwrite").json(src)
-    schema = _cdc_update_schema(with_value=False)
-    stream = stream_json_records(spark, src, schema, max_files_per_trigger=1)
-    q = run_cdc_apply(
-        stream,
+    _cdc_apply_files(
+        spark,
+        src,
         os.path.join(root, "snap"),
         os.path.join(root, "ck"),
-        key="user_id",
-        version_col="version",
+        with_value=False,
     )
-    q.awaitTermination()
     snap = read_cdc_snapshot(spark, os.path.join(root, "snap"))
     seg = snap.select(
         "user_id",
@@ -2586,17 +2530,8 @@ def _q_ivf_topk_recall(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id", F.explode(F.array(*structs)).alias("_q")
     ).select("vec_id", "_q.qid", "_q._cos", "_q._inp")
     w = Window.partitionBy("qid").orderBy(F.desc("_cos"), F.col("vec_id"))
-    ivf10 = (
-        stacked.filter(F.col("_inp"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 10)
-        .select("qid", "vec_id")
-    )
-    bf10 = (
-        stacked.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 10)
-        .select("qid", "vec_id")
-    )
+    ivf10 = _top10(stacked.filter(F.col("_inp")), w)
+    bf10 = _top10(stacked, w)
     return _recall_row(ivf10, bf10, len(qrows))
 
 
@@ -2701,17 +2636,8 @@ def _q_lsh_topk_recall(spark: SparkSession, sf: str) -> DataFrame:
         .select("vec_id", "_q.qid", "_q._ham", "_q._cos")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("_cos"), F.col("vec_id"))
-    lsh10 = (
-        stacked.filter(F.col("_ham") <= _LSH_GATE_HAMMING)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 10)
-        .select("qid", "vec_id")
-    )
-    bf10 = (
-        stacked.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 10)
-        .select("qid", "vec_id")
-    )
+    lsh10 = _top10(stacked.filter(F.col("_ham") <= _LSH_GATE_HAMMING), w)
+    bf10 = _top10(stacked, w)
     return _recall_row(lsh10, bf10, len(queries))
 
 
@@ -2759,9 +2685,8 @@ def _q_value_histogram(spark: SparkSession, sf: str) -> DataFrame:
     return histogram(events, "value", width=25.0)
 
 
-def _q_priority_except_all(spark: SparkSession, sf: str) -> DataFrame:
-    # EXCEPT ALL (multiset difference): order priorities of 1995-H1
-    # minus 1995-H2, multiplicities preserved
+def _priority_halves(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
+    """Order priorities of 1995-H1 and of 1995-H2, one row per order."""
     orders = load_table(spark, sf, "orders")
     h1 = orders.filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
@@ -2771,21 +2696,18 @@ def _q_priority_except_all(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("o_orderdate") >= F.lit("1995-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
     ).select("o_orderpriority")
-    return except_all_rows(h1, h2)
+    return h1, h2
+
+
+def _q_priority_except_all(spark: SparkSession, sf: str) -> DataFrame:
+    # EXCEPT ALL (multiset difference): order priorities of 1995-H1
+    # minus 1995-H2, multiplicities preserved
+    return except_all_rows(*_priority_halves(spark, sf))
 
 
 def _q_priority_intersect_all(spark: SparkSession, sf: str) -> DataFrame:
     # INTERSECT ALL (multiset min of multiplicities), same halves
-    orders = load_table(spark, sf, "orders")
-    h1 = orders.filter(
-        (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1995-07-01").cast("timestamp"))
-    ).select("o_orderpriority")
-    h2 = orders.filter(
-        (F.col("o_orderdate") >= F.lit("1995-07-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
-    ).select("o_orderpriority")
-    return intersect_all_rows(h1, h2)
+    return intersect_all_rows(*_priority_halves(spark, sf))
 
 
 def _q_tpch_q18(spark: SparkSession, sf: str) -> DataFrame:
@@ -3528,9 +3450,7 @@ def _q_sliding_window_counts(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("record_count"),
-            F.round(F.sum(F.col("value").cast("decimal(20,6)")), 2)
-            .cast("double")
-            .alias("value_sum"),
+            _value_sum(2),
         )
         .select(
             F.col("win.start").alias("window_start"),
@@ -3773,6 +3693,21 @@ def _q_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
     return bpe_encode(docs, learned)
 
 
+def _bpe_subword_learned(docs: DataFrame) -> list[tuple[str, str]]:
+    """The 3 character-level merges learned from ``docs``, in round
+    order (3 one-row argmax collects at build time)."""
+    from etl_based_real_time_air_quality_monitoring_system_spark.operators.text import (
+        bpe_subword_merges,
+    )
+
+    return [
+        (r["merge_left"], r["merge_right"])
+        for r in bpe_subword_merges(docs, "text", n_merges=3)
+        .orderBy("merge_round")
+        .collect()
+    ]
+
+
 def _q_bpe_subword_encode(spark: SparkSession, sf: str) -> DataFrame:
     # CHARACTER-level BPE (Sennrich et al. 2016 proper — the r7
     # bpe_encode operates at word granularity): learn 3 within-word
@@ -3787,16 +3722,10 @@ def _q_bpe_subword_encode(spark: SparkSession, sf: str) -> DataFrame:
     # BUILD time (3 argmax collects, each 1 row).
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.text import (
         bpe_subword_encode,
-        bpe_subword_merges,
     )
 
     docs = load_table(spark, sf, "documents")
-    learned = [
-        (r["merge_left"], r["merge_right"])
-        for r in bpe_subword_merges(docs, "text", n_merges=3)
-        .orderBy("merge_round")
-        .collect()
-    ]
+    learned = _bpe_subword_learned(docs)
     return bpe_subword_encode(docs, learned)
 
 
@@ -3819,17 +3748,11 @@ def _q_bpe_subword_total(spark: SparkSession, sf: str) -> DataFrame:
     # token_id, is_byte) stream against the oracle's replay.
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.text import (
         bpe_subword_encode_total,
-        bpe_subword_merges,
         bpe_subword_vocab,
     )
 
     docs = load_table(spark, sf, "documents")
-    learned = [
-        (r["merge_left"], r["merge_right"])
-        for r in bpe_subword_merges(docs, "text", n_merges=3)
-        .orderBy("merge_round")
-        .collect()
-    ]
+    learned = _bpe_subword_learned(docs)
     # r13: the frozen top-k vocabulary comes from bpe_subword_vocab —
     # the SAME (token, token_id) table bpe_subword_encode joins onto
     # its stream (every vocab token occurs >= 1, so distinct (token,
@@ -3985,6 +3908,33 @@ _NORM_NOISE_SUFFIX = (
 )
 
 
+def _normalized_docs(
+    spark: SparkSession,
+    sf: str,
+    normalize: Callable[[Column], Column],
+    prefix: str = _NORM_NOISE_PREFIX,
+    suffix: str = _NORM_NOISE_SUFFIX,
+) -> DataFrame:
+    """``(doc_id, text_norm, n_tokens)`` for every non-NULL document:
+    the noise ``prefix`` and ``suffix`` wrapped around its text, then
+    ``normalize`` applied."""
+    from etl_based_real_time_air_quality_monitoring_system_spark.operators.text import (
+        tokens,
+    )
+
+    docs = load_table(spark, sf, "documents")
+    noisy = F.concat(F.lit(prefix), F.col("text"), F.lit(suffix))
+    return (
+        docs.filter(F.col("text").isNotNull())
+        .select("doc_id", normalize(noisy).alias("text_norm"))
+        .select(
+            "doc_id",
+            "text_norm",
+            F.size(tokens("text_norm")).alias("n_tokens"),
+        )
+    )
+
+
 def _q_normalize_text(spark: SparkSession, sf: str) -> DataFrame:
     # pre-tokenize text normalization (the CCNet/C4 stage Spark has
     # no NFKC built-in for): documented compatibility-subset folds as
@@ -3999,22 +3949,9 @@ def _q_normalize_text(spark: SparkSession, sf: str) -> DataFrame:
     # normalize) is property-pinned in tests.
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.text import (
         normalize_text,
-        tokens,
     )
 
-    docs = load_table(spark, sf, "documents")
-    noisy = F.concat(
-        F.lit(_NORM_NOISE_PREFIX), F.col("text"), F.lit(_NORM_NOISE_SUFFIX)
-    )
-    return (
-        docs.filter(F.col("text").isNotNull())
-        .select("doc_id", normalize_text(noisy).alias("text_norm"))
-        .select(
-            "doc_id",
-            "text_norm",
-            F.size(tokens("text_norm")).alias("n_tokens"),
-        )
-    )
+    return _normalized_docs(spark, sf, normalize_text)
 
 
 #: NFKC-ONLY unicode noise (compatibility classes the subset fold
@@ -4040,23 +3977,14 @@ def _q_normalize_text_nfkc(spark: SparkSession, sf: str) -> DataFrame:
     # subset-class inputs, and pytest pins the NFKC-only expansions.
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.text import (
         normalize_text_nfkc,
-        tokens,
     )
 
-    docs = load_table(spark, sf, "documents")
-    noisy = F.concat(
-        F.lit(_NFKC_NOISE_PREFIX + _NORM_NOISE_PREFIX),
-        F.col("text"),
-        F.lit(_NORM_NOISE_SUFFIX + _NFKC_NOISE_SUFFIX),
-    )
-    return (
-        docs.filter(F.col("text").isNotNull())
-        .select("doc_id", normalize_text_nfkc(noisy).alias("text_norm"))
-        .select(
-            "doc_id",
-            "text_norm",
-            F.size(tokens("text_norm")).alias("n_tokens"),
-        )
+    return _normalized_docs(
+        spark,
+        sf,
+        normalize_text_nfkc,
+        _NFKC_NOISE_PREFIX + _NORM_NOISE_PREFIX,
+        _NORM_NOISE_SUFFIX + _NFKC_NOISE_SUFFIX,
     )
 
 
@@ -4072,22 +4000,9 @@ def _q_normalize_text_nfkc_agree(spark: SparkSession, sf: str) -> DataFrame:
     # cannot express directly.
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.text import (
         normalize_text_nfkc,
-        tokens,
     )
 
-    docs = load_table(spark, sf, "documents")
-    noisy = F.concat(
-        F.lit(_NORM_NOISE_PREFIX), F.col("text"), F.lit(_NORM_NOISE_SUFFIX)
-    )
-    return (
-        docs.filter(F.col("text").isNotNull())
-        .select("doc_id", normalize_text_nfkc(noisy).alias("text_norm"))
-        .select(
-            "doc_id",
-            "text_norm",
-            F.size(tokens("text_norm")).alias("n_tokens"),
-        )
-    )
+    return _normalized_docs(spark, sf, normalize_text_nfkc)
 
 
 def _q_corpus_pipeline_normalized(spark: SparkSession, sf: str) -> DataFrame:
@@ -4371,14 +4286,53 @@ def _q_pq_codes(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _pq_gate_queries(emb: DataFrame) -> list[tuple[int, list[float]]]:
+def _pq_gate_queries(
+    emb: DataFrame, n: int = 5
+) -> list[tuple[int, list[float]]]:
+    """Vectors 0..n-1 as (vec_id, micros embedding) search queries."""
     qrows = (
-        emb.filter(F.col("vec_id") < 5)
+        emb.filter(F.col("vec_id") < n)
         .select("vec_id", "embedding")
         .orderBy("vec_id")
         .collect()
     )
     return [(int(r["vec_id"]), list(r["embedding"])) for r in qrows]
+
+
+def _ivfpq_confusion_inputs(spark: SparkSession, sf: str):
+    """The IVF-PQ 1-NN label-confusion gate set-up: micros embeddings,
+    labels, 8 coarse centroids with 8x16 residual codebooks, and
+    vectors 0-15 as the queries."""
+    from etl_based_real_time_air_quality_monitoring_system_spark.operators.similarity import (
+        ivfpq_codebooks,
+    )
+
+    emb = _pq_micros_emb(spark, sf)
+    labels = load_table(spark, sf, "embeddings").select("vec_id", "label")
+    coarse, cb = ivfpq_codebooks(
+        emb, "vec_id", "embedding", n_coarse=8, n_subspaces=8, n_codes=16
+    )
+    return emb, labels, coarse, cb, _pq_gate_queries(emb, 16)
+
+
+def _embeddings_json_stream(spark: SparkSession, sf: str, src: str) -> DataFrame:
+    """The raw embeddings written as three JSON files under ``src``
+    (doubles round-trip exactly through JSON) and streamed back one
+    file per micro-batch; quantization and encoding happen per batch."""
+    from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import (
+        stream_json_records,
+    )
+
+    load_table(spark, sf, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    ).repartition(3).write.mode("overwrite").json(src)
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    return stream_json_records(spark, src, schema, max_files_per_trigger=1)
 
 
 def _q_pq_topk_adc(spark: SparkSession, sf: str) -> DataFrame:
@@ -4435,9 +4389,6 @@ def _q_streaming_pq_index(spark: SparkSession, sf: str) -> DataFrame:
         pq_codebooks,
         pq_encode,
     )
-    from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import (
-        stream_json_records,
-    )
 
     emb = _pq_micros_emb(spark, sf)
     cb = pq_codebooks(emb, "vec_id", "embedding", n_subspaces=8, n_codes=16)
@@ -4447,18 +4398,7 @@ def _q_streaming_pq_index(spark: SparkSession, sf: str) -> DataFrame:
     ck = idx + "_ck"
     for p in (src, idx, ck):
         _shutil.rmtree(p, ignore_errors=True)
-    # raw vectors stream in (doubles roundtrip exactly through JSON);
-    # quantization + encode happen per micro-batch engine-side
-    load_table(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).repartition(3).write.mode("overwrite").json(src)
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    stream = stream_json_records(spark, src, schema, max_files_per_trigger=1)
+    stream = _embeddings_json_stream(spark, sf, src)
 
     def encode_batch(batch: DataFrame, epoch_id: int) -> None:
         # replay guard: each epoch OVERWRITES its own partition
@@ -4543,6 +4483,15 @@ def _exact_l2_top10(emb: DataFrame, queries: list) -> DataFrame:
     )
 
 
+def _top10(ranked: DataFrame, w) -> DataFrame:
+    """The first 10 ``(qid, vec_id)`` rows per window partition of ``w``."""
+    return (
+        ranked.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= 10)
+        .select("qid", "vec_id")
+    )
+
+
 def _recall_row(adc: DataFrame, exact: DataFrame, n_q: int) -> DataFrame:
     hits = adc.join(exact, ["qid", "vec_id"], "inner")
     return hits.agg(F.count("*").alias("n_hits")).select(
@@ -4595,22 +4544,10 @@ def _q_nn_confusion_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     # with the query set there.
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.similarity import (
         ivfpq_adc_knn,
-        ivfpq_codebooks,
         nn_confusion_over_candidates,
     )
 
-    emb = _pq_micros_emb(spark, sf)
-    labels = load_table(spark, sf, "embeddings").select("vec_id", "label")
-    coarse, cb = ivfpq_codebooks(
-        emb, "vec_id", "embedding", n_coarse=8, n_subspaces=8, n_codes=16
-    )
-    qrows = (
-        emb.filter(F.col("vec_id") < 16)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    queries = [(int(r["vec_id"]), list(r["embedding"])) for r in qrows]
+    emb, labels, coarse, cb, queries = _ivfpq_confusion_inputs(spark, sf)
     cand = ivfpq_adc_knn(
         emb, "vec_id", "embedding", queries, coarse, cb, k=2, n_probe=4
     )
@@ -4630,23 +4567,11 @@ def _q_nn_confusion_ivfpq_stored(spark: SparkSession, sf: str) -> DataFrame:
     # shares that oracle verbatim.
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.similarity import (
         ivfpq_adc_knn_stored,
-        ivfpq_codebooks,
         ivfpq_write_index,
         nn_confusion_over_candidates,
     )
 
-    emb = _pq_micros_emb(spark, sf)
-    labels = load_table(spark, sf, "embeddings").select("vec_id", "label")
-    coarse, cb = ivfpq_codebooks(
-        emb, "vec_id", "embedding", n_coarse=8, n_subspaces=8, n_codes=16
-    )
-    qrows = (
-        emb.filter(F.col("vec_id") < 16)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    queries = [(int(r["vec_id"]), list(r["embedding"])) for r in qrows]
+    emb, labels, coarse, cb, queries = _ivfpq_confusion_inputs(spark, sf)
     path = _gate_sink(sf, "ivfpq_index")
     ivfpq_write_index(emb, "vec_id", "embedding", coarse, cb, path)
     cand = ivfpq_adc_knn_stored(
@@ -4676,28 +4601,13 @@ def _q_streaming_ivfpq_index(spark: SparkSession, sf: str) -> DataFrame:
 
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.similarity import (
         ivfpq_adc_knn_stored,
-        ivfpq_codebooks,
         ivfpq_compact_index,
         ivfpq_encode,
         micros_vec,
         nn_confusion_over_candidates,
     )
-    from etl_based_real_time_air_quality_monitoring_system_spark.streaming.pipeline import (
-        stream_json_records,
-    )
 
-    emb = _pq_micros_emb(spark, sf)
-    labels = load_table(spark, sf, "embeddings").select("vec_id", "label")
-    coarse, cb = ivfpq_codebooks(
-        emb, "vec_id", "embedding", n_coarse=8, n_subspaces=8, n_codes=16
-    )
-    qrows = (
-        emb.filter(F.col("vec_id") < 16)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    queries = [(int(r["vec_id"]), list(r["embedding"])) for r in qrows]
+    _, labels, coarse, cb, queries = _ivfpq_confusion_inputs(spark, sf)
 
     src = _gate_sink(sf, "ivfpq_stream_src")
     raw = _gate_sink(sf, "ivfpq_stream_raw")
@@ -4705,16 +4615,7 @@ def _q_streaming_ivfpq_index(spark: SparkSession, sf: str) -> DataFrame:
     ck = raw + "_ck"
     for p in (src, raw, idx, ck):
         _shutil.rmtree(p, ignore_errors=True)
-    load_table(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).repartition(3).write.mode("overwrite").json(src)
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    stream = stream_json_records(spark, src, schema, max_files_per_trigger=1)
+    stream = _embeddings_json_stream(spark, sf, src)
 
     def encode_batch(batch: DataFrame, epoch_id: int) -> None:
         micros = batch.select(
@@ -4907,9 +4808,7 @@ def _q_sink_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     back = spark.read.orc(path)
     return back.groupBy("event_type").agg(
         F.count("*").alias("record_count"),
-        F.sum(F.col("value").cast("decimal(20,6)"))
-        .cast("double")
-        .alias("value_sum"),
+        _value_sum(),
     )
 
 
@@ -4932,9 +4831,7 @@ def _q_schema_evolution_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     return back.groupBy("event_type").agg(
         F.count("*").alias("record_count"),
         F.count("user_id").alias("rows_with_user"),
-        F.sum(F.col("value").cast("decimal(20,6)"))
-        .cast("double")
-        .alias("value_sum"),
+        _value_sum(),
     )
 
 
@@ -5229,21 +5126,10 @@ def _q_streaming_sliding_counts(spark: SparkSession, sf: str) -> DataFrame:
         slide="1 hour",
         aggs=[
             F.count("*").alias("record_count"),
-            F.round(F.sum(F.col("value").cast("decimal(20,6)")), 2)
-            .cast("double")
-            .alias("value_sum"),
+            _value_sum(2),
         ],
     )
-    sink = "streaming_sliding_counts_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(agg, "streaming_sliding_counts_sink")
 
 
 def _q_lsh_rescore_tfidf(spark: SparkSession, sf: str) -> DataFrame:
@@ -5813,7 +5699,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return ordered
 
 
-# --- generated oracle fragments for the hash-based dedup family -------
+# --- oracle SQL fragments: each CTE chain that several oracles share --
 
 _TOKS = r"string_split_regex(trim(text), '\s+')"
 
@@ -5842,7 +5728,24 @@ def _normalize_sql(expr: str) -> str:
     for src, dst in NORMALIZE_EXPANSIONS:
         x = f"replace({x}, {_sql_str(src)}, {_sql_str(dst)})"
     return f"trim(regexp_replace(lower({x}), ' +', ' ', 'g'))"
+
+
 _STOP_SQL = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
+
+
+def _quality_sql(toks: str) -> str:
+    """DuckDB twin of ``operators.text.quality_score`` over the token
+    list ``toks``: length, lexical diversity and stopword share,
+    floored half-up to 4 decimals."""
+    return f"""floor((
+                0.4::DOUBLE * least(len({toks})::DOUBLE / 100.0::DOUBLE, 1.0::DOUBLE)
+              + 0.3::DOUBLE * (len(list_distinct({toks}))::DOUBLE / len({toks})::DOUBLE)
+              + 0.3::DOUBLE * (1.0::DOUBLE
+                    - len(list_filter({toks}, x -> x IN {_STOP_SQL}))::DOUBLE
+                      / len({toks})::DOUBLE)
+              ) * 10000.0 + 0.5) / 10000.0"""
+
+
 #: Gopher required-stopword list as a DuckDB list literal (mirrors
 #: operators.text.GOPHER_STOPWORDS)
 _GOPHER_SQL = "['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with']"
@@ -5887,6 +5790,75 @@ _BAND_SELECTS = "\n            UNION ALL\n            ".join(
     for b in range(4)
 )
 
+
+#: MinHash signatures over ``sh`` -> the 4 LSH band buckets
+#: (mirrors dedup.minhash_lsh_candidates up to the bucket self-join)
+_SIG_BAND_CTES = f"""sig AS (
+                SELECT doc_id,
+                   {_MINHASH_AGGS}
+                FROM sh GROUP BY doc_id
+            ),
+            bands AS (
+            {_BAND_SELECTS}
+            )"""
+
+#: the 3-shingle chain of every document, up to its LSH bands
+_LSH_BAND_CTES = f"""{_SHINGLE_CTES},
+            {_SIG_BAND_CTES}"""
+
+
+def _lsh_pairs_select(a: str = "doc_a", b: str = "doc_b") -> str:
+    """LSH candidate pairs: documents sharing a bucket in any band,
+    each unordered pair once (smaller id as ``a``)."""
+    return f"""SELECT DISTINCT a.doc_id AS {a}, b.doc_id AS {b}
+                FROM bands a JOIN bands b
+                  ON a.band = b.band AND a.bucket = b.bucket
+                 AND a.doc_id < b.doc_id"""
+
+
+#: LSH candidate ``pairs`` and their symmetric edge set ``sym(a, b)``
+_LSH_SYM_CTES = f"""{_LSH_BAND_CTES},
+            pairs AS (
+                {_lsh_pairs_select()}
+            ),
+            sym AS (
+                SELECT doc_a AS a, doc_b AS b FROM pairs
+                UNION
+                SELECT doc_b, doc_a FROM pairs
+            )"""
+
+#: transitive closure ``reach(v, r)`` of the LSH graph (needs WITH
+#: RECURSIVE); connected components (graph.connected_components) label
+#: each vertex by its smallest reachable id, see _LSH_CC_SELECT
+_LSH_REACH_CTES = f"""{_LSH_SYM_CTES},
+            reach(v, r) AS (
+                SELECT a, b FROM sym
+                UNION
+                SELECT reach.v, sym.b FROM reach JOIN sym ON reach.r = sym.a
+            )"""
+
+_LSH_CC_SELECT = """SELECT v AS doc_id, least(v, min(r)) AS cluster_id
+                FROM reach GROUP BY v"""
+
+#: ``cc(doc_id, cluster_id)`` for every document with a candidate pair
+_LSH_CC_CTES = f"""{_LSH_REACH_CTES},
+            cc AS (
+                {_LSH_CC_SELECT}
+            )"""
+
+#: ``j(cluster_id, doc_id, quality)``: each clustered document's
+#: component and quality score, the input of keep-best-per-cluster
+_LSH_CLUSTER_QUALITY_CTES = f"""{_LSH_CC_CTES},
+            q AS (
+                SELECT doc_id, {_quality_sql("t")} AS quality
+                FROM toks
+            ),
+            j AS (
+                SELECT cc.cluster_id, cc.doc_id, q.quality
+                FROM cc JOIN q ON cc.doc_id = q.doc_id
+            )"""
+
+
 #: PageRank iterations unrolled as CTEs (mirrors graph.pagerank_micros:
 #: pr'(v) = 150000 + (850000 * sum(pr(u) // deg(u))) // 1e6, all BIGINT)
 _PR_CTES = ",\n            ".join(
@@ -5900,6 +5872,23 @@ _PR_CTES = ",\n            ".join(
             )"""
     for i in range(3)
 )
+
+
+def _bpe_fuse_sql(joiner: str) -> str:
+    """The symbol list ``t`` with merge ``m`` (l, r) applied left to
+    right: each non-overlapping (l, r) occurrence fuses into one
+    symbol, ``joiner`` (a SQL prefix such as ``"chr(1) || "``) between
+    the two parts."""
+    return f"""list_filter(
+                    list_transform(range(1, len(t) + 1), i ->
+                        CASE WHEN i < len(t) AND t[i] = m.l
+                                  AND t[i + 1] = m.r
+                                 THEN t[i] || {joiner}t[i + 1]
+                             WHEN i > 1 AND t[i - 1] = m.l AND t[i] = m.r
+                                 THEN NULL
+                             ELSE t[i] END),
+                    x -> x IS NOT NULL)"""
+
 
 def _bpe_round_ctes(n_rounds: int = 3, carry: str = "") -> str:
     """BPE merge rounds unrolled as CTEs (the _PR_CTES sequential-fold
@@ -5933,15 +5922,7 @@ def _bpe_round_ctes(n_rounds: int = 3, carry: str = "") -> str:
                 -- unchanged — matching the operator, which stops
                 -- merging when no pair remains (a plain cross join
                 -- would zero out the corpus and every later round)
-                SELECT {carry}list_filter(
-                    list_transform(range(1, len(t) + 1), i ->
-                        CASE WHEN i < len(t) AND t[i] = m.l
-                                  AND t[i + 1] = m.r
-                                 THEN t[i] || chr(1) || t[i + 1]
-                             WHEN i > 1 AND t[i - 1] = m.l AND t[i] = m.r
-                                 THEN NULL
-                             ELSE t[i] END),
-                    x -> x IS NOT NULL) AS t
+                SELECT {carry}{_bpe_fuse_sql("chr(1) || ")} AS t
                 FROM {prev} LEFT JOIN m{k} m ON TRUE
             )""")
     return ",".join(parts)
@@ -6047,18 +6028,148 @@ def _bpe_sub_round_ctes(n_rounds: int = 3) -> str:
                 ) WHERE rn = 1
             ),
             s{k} AS (
-                SELECT w, f, list_filter(
-                    list_transform(range(1, len(t) + 1), i ->
-                        CASE WHEN i < len(t) AND t[i] = m.l
-                                  AND t[i + 1] = m.r
-                                 THEN t[i] || t[i + 1]
-                             WHEN i > 1 AND t[i - 1] = m.l AND t[i] = m.r
-                                 THEN NULL
-                             ELSE t[i] END),
-                    x -> x IS NOT NULL) AS t
+                SELECT w, f, {_bpe_fuse_sql("")} AS t
                 FROM {prev} LEFT JOIN m{k} m ON TRUE
             )""")
     return ",".join(parts)
+
+
+#: the character-level BPE learn chain over word TYPES (three
+#: rounds, see _bpe_sub_round_ctes), then every word of every document
+#: encoded: ``sub(doc_id, wpos, spos, token)``.  string_split(w, '') on
+#: '' yields [''] in DuckDB but [] in Spark — the CASE aligns the
+#: empty-word edge.
+_BPE_SUB_STREAM_CTES = rf"""wt AS (
+                SELECT w, CAST(count(*) AS BIGINT) AS f FROM (
+                    SELECT unnest({_TOKS}) AS w
+                    FROM documents WHERE text IS NOT NULL
+                ) GROUP BY w
+            ),
+            s0 AS (
+                SELECT w, f, list_concat(
+                    CASE WHEN w = '' THEN []::VARCHAR[]
+                         ELSE string_split(w, '') END,
+                    ['</w>']) AS t
+                FROM wt
+            ),
+            {_bpe_sub_round_ctes(3)},
+            dw AS (
+                SELECT doc_id, CAST(i AS INTEGER) AS wpos, t[i] AS w
+                FROM (SELECT doc_id, {_TOKS} AS t
+                      FROM documents WHERE text IS NOT NULL) dt,
+                     UNNEST(range(1, len(t) + 1)) AS u(i)
+            ),
+            sub AS (
+                SELECT d.doc_id, d.wpos, CAST(j AS INTEGER) AS spos,
+                       s.t[j] AS token
+                FROM dw d JOIN s3 s USING (w),
+                     UNNEST(range(1, len(s.t) + 1)) AS u(j)
+            )"""
+
+
+def _shingle_overlap_ctes(shingles: str) -> str:
+    """``sizes(doc_id, n)`` and ``pairs(doc_a, doc_b, common)``: the
+    distinct-shingle count of every document in ``shingles`` and the
+    shared-shingle count of every overlapping pair."""
+    return f"""sizes AS (SELECT doc_id, count(*) AS n FROM {shingles} GROUP BY doc_id),
+            pairs AS (
+                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
+                FROM {shingles} a JOIN {shingles} b
+                  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                GROUP BY 1, 2
+            )"""
+
+
+#: the events log as the CDC gates' versioned updates
+_CDC_UPDATES_CTE = """u AS (
+                SELECT user_id, event_id AS version, value, event_type
+                FROM events
+            )"""
+
+
+def _cdc_version_ranked(name: str, where: str = "") -> str:
+    """``name``: the updates of ``u`` that ``where`` admits, ranked
+    newest-first per user (rn = 1 is the user's row in the CDC
+    snapshot unless it is an 'error' tombstone)."""
+    return f"""{name} AS (
+                SELECT user_id, version, value, event_type,
+                       row_number() OVER (
+                           PARTITION BY user_id ORDER BY version DESC
+                       ) AS rn
+                FROM u{" WHERE " + where if where else ""}
+            )"""
+
+
+#: integer-micros embeddings (mirrors operators.similarity.micros_vec)
+_MQ_SELECT = """SELECT vec_id, list_transform(embedding::DOUBLE[],
+                           x -> floor(x * 1000000.0 + 0.5)) AS me
+                FROM embeddings"""
+_MQ_CTE = f"""mq AS (
+                {_MQ_SELECT}
+            )"""
+
+#: the first 8 micros vectors as coarse centroids ``cc(cid, ce)``
+_COARSE_CTES = f"""{_MQ_CTE},
+            cc AS (
+                SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
+                       me AS ce
+                FROM (SELECT * FROM mq ORDER BY vec_id LIMIT 8)
+            )"""
+
+#: the coarse-assign ranking of centroid ``c`` for vector ``m``: argmin
+#: squared L2 via the dot identity (the x.x term is constant across
+#: centroids), ties -> LOWEST cid
+_COARSE_RANK = """row_number() OVER (
+                        PARTITION BY m.vec_id ORDER BY
+                            list_dot_product(c.ce, c.ce)
+                            - 2 * list_dot_product(m.me, c.ce) ASC,
+                            c.cid ASC
+                    ) AS rn"""
+
+#: the pq_encode ranking of codeword ``c.cv`` for subvector ``s.sv``:
+#: argmin squared L2 via the dot identity, ties -> LOWEST code (exact,
+#: every intermediate is an integer < 2^53)
+_PQ_CODE_RANK = """row_number() OVER (
+                        PARTITION BY s.vec_id, s.j ORDER BY
+                            list_dot_product(s.sv, s.sv)
+                            - 2 * list_dot_product(s.sv, c.cv)
+                            + list_dot_product(c.cv, c.cv) ASC,
+                            c.code ASC
+                    ) AS rn"""
+
+
+def _pq_enc_cte(subs: str) -> str:
+    """``enc(vec_id, j, code)``: the nearest codeword per subvector of
+    ``subs``."""
+    return f"""enc AS (
+                SELECT vec_id, j, code FROM (
+                    SELECT s.vec_id, s.j, c.code, {_PQ_CODE_RANK}
+                    FROM {subs} s JOIN csubs c ON s.j = c.j
+                ) WHERE rn = 1
+            )"""
+
+
+#: PQ over the micros embeddings with the first 16 vectors as the
+#: codebook: 8 subspaces of 8 dims, vector slices ``subs`` and
+#: codeword slices ``csubs`` (mirrors pq_codebooks)
+_PQ_SUB_CTES = f"""{_MQ_CTE},
+            cb AS (
+                SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
+                       me AS ce
+                FROM (SELECT * FROM mq ORDER BY vec_id LIMIT 16)
+            ),
+            subs AS (
+                SELECT vec_id, j, list_slice(me, j*8 + 1, j*8 + 8) AS sv
+                FROM mq, UNNEST(range(0, 8)) AS u(j)
+            ),
+            csubs AS (
+                SELECT code, j, list_slice(ce, j*8 + 1, j*8 + 8) AS cv
+                FROM cb, UNNEST(range(0, 8)) AS u(j)
+            )"""
+
+#: ... plus every vector's PQ codes ``enc`` (mirrors pq_encode)
+_PQ_ENC_CTES = f"""{_PQ_SUB_CTES},
+            {_pq_enc_cte("subs")}"""
 
 
 #: shared IVF-PQ oracle chain (micros -> coarse assign -> residual
@@ -6067,31 +6178,16 @@ def _bpe_sub_round_ctes(n_rounds: int = 3) -> str:
 #: ivfpq_recall and nn_confusion_ivfpq all build on it so the three
 #: can never drift apart.  The template's only free parameter is the
 #: query-set size (vec_id < {n_queries}).
-_IVFPQ_CTES_TEMPLATE = """
-            WITH mq AS (
-                SELECT vec_id, list_transform(embedding::DOUBLE[],
-                           x -> floor(x * 1000000.0 + 0.5)) AS me
-                FROM embeddings
-            ),
-            cc AS (
-                SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-                       me AS ce
-                FROM (SELECT * FROM mq ORDER BY vec_id LIMIT 8)
-            ),
-            -- coarse assign: argmin squared L2 (dot identity; the x.x
-            -- term is constant across centroids), ties -> LOWEST cid;
-            -- residual = x - centroid, exact integer components
+_IVFPQ_CTES_TEMPLATE = f"""
+            WITH {_COARSE_CTES},
+            -- coarse assign (_COARSE_RANK); residual = x - centroid,
+            -- exact integer components
             assign AS (
                 SELECT vec_id, cid, re FROM (
                     SELECT m.vec_id, c.cid,
                            list_transform(range(1, len(m.me) + 1),
                                i -> m.me[i] - c.ce[i]) AS re,
-                           row_number() OVER (
-                               PARTITION BY m.vec_id ORDER BY
-                                   list_dot_product(c.ce, c.ce)
-                                   - 2 * list_dot_product(m.me, c.ce) ASC,
-                                   c.cid ASC
-                           ) AS rn
+                           {_COARSE_RANK}
                     FROM mq m CROSS JOIN cc c
                 ) WHERE rn = 1
             ),
@@ -6112,20 +6208,9 @@ _IVFPQ_CTES_TEMPLATE = """
                 SELECT code, j, list_slice(ce, j*8 + 1, j*8 + 8) AS cv
                 FROM rcb, UNNEST(range(0, 8)) AS u(j)
             ),
-            enc AS (
-                SELECT vec_id, j, code FROM (
-                    SELECT s.vec_id, s.j, c.code, row_number() OVER (
-                        PARTITION BY s.vec_id, s.j ORDER BY
-                            list_dot_product(s.sv, s.sv)
-                            - 2 * list_dot_product(s.sv, c.cv)
-                            + list_dot_product(c.cv, c.cv) ASC,
-                            c.code ASC
-                    ) AS rn
-                    FROM rsubs s JOIN csubs c ON s.j = c.j
-                ) WHERE rn = 1
-            ),
+            {_pq_enc_cte("rsubs")},
             q AS (SELECT vec_id AS qid, me AS qe FROM mq
-                  WHERE vec_id < {n_queries}),
+                  WHERE vec_id < {{n_queries}}),
             probes AS (
                 SELECT qid, cid, ce FROM (
                     SELECT q.qid, c.cid, c.ce, row_number() OVER (
@@ -6183,6 +6268,32 @@ _NN_CONFUSION_TAIL = """
         """
 
 
+#: the 10 nearest candidates per query by ADC distance (ties -> lowest id)
+_ADC_TOP10 = """
+            SELECT qid, vec_id, adc_dist FROM (
+                SELECT qid, vec_id, adc_dist, row_number() OVER (
+                    PARTITION BY qid ORDER BY adc_dist ASC, vec_id ASC
+                ) AS rn
+                FROM adc
+            ) WHERE rn <= 10
+        """
+
+
+def _recall_tail(approx: str) -> str:
+    """Recall@10 of the top-10 lists ``approx(qid, vec_id)`` against the
+    exact lists ``bf`` over the queries ``qfull``, in integer micros."""
+    return f"""h AS (
+                SELECT count(*) AS n_hits
+                FROM {approx} JOIN bf USING (qid, vec_id)
+            )
+            SELECT (SELECT count(DISTINCT qid) FROM qfull) AS n_queries,
+                   h.n_hits,
+                   (h.n_hits * 1000000)
+                       // ((SELECT count(DISTINCT qid) FROM qfull) * 10)
+                       AS recall_micros
+            FROM h"""
+
+
 def _ivfpq_ctes(n_queries: int = 5) -> str:
     return _IVFPQ_CTES_TEMPLATE.format(n_queries=n_queries)
 
@@ -6199,19 +6310,135 @@ _SIMHASH_ASSEMBLE = "\n                 + ".join(
     for j in range(SIMHASH_BITS)
 )
 
-#: language-ID argmax as a CASE chain — provably equivalent to the
-#: engine's first-max fold (earlier language wins ties)
-_LANG_SCORES = ",\n                   ".join(
-    "len(list_filter(toks, x -> x IN ({words}))) AS s_{lang}".format(
-        lang=lang, words=", ".join(f"'{w}'" for w in words)
+#: per-document SimHash bit votes ``bits(doc_id, b0..)`` over md5
+#: token hashes (mirrors dedup.simhash; _SIMHASH_ASSEMBLE packs them)
+_SIMHASH_BITS_CTES = rf"""tok AS (
+                SELECT doc_id, unnest({_TOKS}) AS token FROM documents
+            ),
+            h AS (
+                SELECT doc_id,
+                       ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
+                FROM tok
+            ),
+            bits AS (
+                SELECT doc_id,
+                   {_SIMHASH_BIT_AGGS}
+                FROM h GROUP BY doc_id
+            )"""
+
+
+def _lang_scores_sql(toks: str) -> str:
+    """Per-language marker hit counts ``s_<lang>`` over ``toks``
+    (generated from operators.text.LANG_MARKERS)."""
+    return ",\n                   ".join(
+        "len(list_filter({toks}, x -> x IN ({words}))) AS s_{lang}".format(
+            toks=toks, lang=lang, words=", ".join(f"'{w}'" for w in words)
+        )
+        for lang, words in LANG_MARKERS.items()
     )
-    for lang, words in (
-        ("en", ("the", "and", "of", "to", "a")),
-        ("es", ("el", "la", "de", "que", "y")),
-        ("de", ("der", "die", "und", "das", "ist")),
-        ("fr", ("le", "la", "et", "les", "des")),
+
+
+#: language-ID argmax over the ``s_<lang>`` scores as a CASE chain —
+#: provably equivalent to the engine's first-max fold (earlier
+#: language wins ties)
+_LANG_ARGMAX = """CASE
+                    WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr AND s_en > 0
+                        THEN 'en'
+                    WHEN s_es >= s_de AND s_es >= s_fr AND s_es > 0 THEN 'es'
+                    WHEN s_de >= s_fr AND s_de > 0 THEN 'de'
+                    WHEN s_fr > 0 THEN 'fr'
+                    ELSE 'und' END"""
+
+
+def _feature_bucket_ctes(salt: str, n_buckets: int) -> str:
+    """``toks`` -> ``feats`` (unigrams + bigrams) -> ``fb(doc_id, b)``:
+    every feature of every non-NULL document hashed to one of
+    ``n_buckets`` md5 buckets (the hashed-feature scheme shared by the
+    quality classifier and lang-ID gates)."""
+    return f"""toks AS (
+                SELECT doc_id, {_TOKS} AS t
+                FROM documents WHERE text IS NOT NULL
+            ),
+            feats AS (
+                SELECT doc_id, unnest(list_concat(
+                    t, list_transform(range(1, len(t)),
+                                      i -> t[i] || ' ' || t[i + 1])
+                )) AS f
+                FROM toks
+            ),
+            fb AS (
+                SELECT doc_id,
+                       CAST(('0x' || substr(md5({_sql_str(salt)} || f), 1, 7))
+                            ::BIGINT % {n_buckets} AS INTEGER) AS b
+                FROM feats
+            )"""
+
+
+def _langid_agg_ctes(n_buckets: int) -> str:
+    """Hashed features -> ``agg(doc_id, n, s0..s3)``: per-language
+    floor-mean weight over a document's features, weights from the
+    same _langid_gate_weights literals as the Spark side."""
+    weights = ", ".join(
+        "unnest(["
+        + ",".join(str(w) for w in _langid_gate_weights(lg, n_buckets))
+        + f"]) AS w{i}"
+        for i, lg in enumerate(_LANGID_GATE_LANGS)
     )
+    means = ", ".join(
+        f"CAST(sum(w{i}) AS BIGINT) // count(*) AS s{i}"
+        for i in range(len(_LANGID_GATE_LANGS))
+    )
+    return f"""{_feature_bucket_ctes("langid:v1", n_buckets)},
+            w AS (
+                SELECT CAST(unnest(range(0, {n_buckets})) AS INTEGER) AS b,
+                       {weights}
+            ),
+            agg AS (
+                SELECT fb.doc_id,
+                       count(*) AS n,
+                       {means}
+                FROM fb JOIN w USING (b)
+                GROUP BY fb.doc_id
+            )"""
+
+
+#: lang-ID argmax over agg's scores: the first language (sorted
+#: order) equal to the greatest wins
+_LANGID_ARGMAX_COLS = (
+    "CASE "
+    + " ".join(
+        f"WHEN s{i} = greatest(s0, s1, s2, s3) THEN '{lg}'"
+        for i, lg in enumerate(_LANGID_GATE_LANGS)
+    )
+    + """ END AS lang,
+                   CAST(greatest(s0, s1, s2, s3) AS BIGINT)
+                       AS score_micros"""
 )
+
+
+def _profile_kept_ctes(doc_src: str) -> str:
+    """``t`` -> ``profiled`` -> ``kept``: profile every document of
+    ``doc_src`` (quality, token count, language scores) and keep the
+    English ones inside the quality and length bounds (mirrors
+    plans.corpus.prepare_corpus after its dedup stage)."""
+    return rf"""t AS (
+                SELECT doc_id, source, {_TOKS} AS toks,
+                       string_split_regex(trim(lower(text)), '\s+') AS ltoks
+                FROM {doc_src}
+            ),
+            profiled AS (
+                SELECT doc_id, source,
+                       {_quality_sql("toks")} AS quality,
+                       CAST(len(toks) AS INTEGER) AS n_tokens,
+                       {_lang_scores_sql("ltoks")}
+                FROM t
+            ),
+            kept AS (
+                SELECT * FROM profiled
+                WHERE quality >= 0.5
+                  AND n_tokens BETWEEN 20 AND 2000
+                  AND ({_LANG_ARGMAX}) = 'en'
+            )"""
 
 
 #: the shared dedup -> profile -> quality/lang/token-bound filter CTE
@@ -6233,39 +6460,7 @@ def _corpus_kept_ctes(doc_src: str = "documents") -> str:
                     FROM fp
                 ) WHERE rn = 1
             ),
-            t AS (
-                SELECT doc_id, source, {_TOKS} AS toks,
-                       string_split_regex(trim(lower(text)), '\s+') AS ltoks
-                FROM surv
-            ),
-            profiled AS (
-                SELECT doc_id, source,
-                       floor((
-                           0.4::DOUBLE * least(len(toks)::DOUBLE / 100.0::DOUBLE, 1.0::DOUBLE)
-                         + 0.3::DOUBLE * (len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE)
-                         + 0.3::DOUBLE * (1.0::DOUBLE
-                               - len(list_filter(toks, x -> x IN {_STOP_SQL}))::DOUBLE
-                                 / len(toks)::DOUBLE)
-                           ) * 10000.0 + 0.5) / 10000.0 AS quality,
-                       CAST(len(toks) AS INTEGER) AS n_tokens,
-                       len(list_filter(ltoks, x -> x IN ('the','and','of','to','a'))) AS s_en,
-                       len(list_filter(ltoks, x -> x IN ('el','la','de','que','y'))) AS s_es,
-                       len(list_filter(ltoks, x -> x IN ('der','die','und','das','ist'))) AS s_de,
-                       len(list_filter(ltoks, x -> x IN ('le','la','et','les','des'))) AS s_fr
-                FROM t
-            ),
-            kept AS (
-                SELECT * FROM profiled
-                WHERE quality >= 0.5
-                  AND n_tokens BETWEEN 20 AND 2000
-                  AND (CASE
-                        WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr AND s_en > 0
-                            THEN 'en'
-                        WHEN s_es >= s_de AND s_es >= s_fr AND s_es > 0 THEN 'es'
-                        WHEN s_de >= s_fr AND s_de > 0 THEN 'de'
-                        WHEN s_fr > 0 THEN 'fr'
-                        ELSE 'und' END) = 'en'
-            )"""
+            {_profile_kept_ctes("surv")}"""
 
 
 _CORPUS_KEPT_CTES = _corpus_kept_ctes()
@@ -6303,6 +6498,21 @@ def oracle_sql() -> dict[str, str]:
     # the streamed PQ index must equal the one-shot batch encode for
     # any micro-batch composition, so it shares pq_codes' oracle
     out["streaming_pq_index"] = out["pq_codes"]
+    # the GEMM path finds the same pairs as the pairwise scorer
+    out["embedding_near_dup_gemm"] = out["embedding_near_dup"]
+    # the STORED-index production shape must be search-equivalent to
+    # the in-scan form, and the streamed + compacted index (encode is
+    # row-local) searches identically to the one-shot batch index —
+    # so both share nn_confusion_ivfpq's oracle verbatim; any
+    # divergence between the Spark paths fails rows+hash
+    out["nn_confusion_ivfpq_stored"] = out["nn_confusion_ivfpq"]
+    out["streaming_ivfpq_index"] = out["nn_confusion_ivfpq"]
+    # an exhaustive IVF probe is brute force
+    out["ivf_topk_exhaustive"] = out["embedding_topk"]
+    # keys-only streaming dedup in append mode is a batch DISTINCT
+    out["streaming_dedup_keys"] = out["distinct_user_event"]
+    # a lossless round trip of the events table, like the ORC sink's
+    out["streaming_to_table_roundtrip"] = out["sink_orc_roundtrip"]
     # the full-NFKC path on subset-class-only input (ASCII corpus +
     # _NORM_NOISE_*) must equal the subset fold chain character for
     # character (the documented equivalence contract), so the
@@ -6476,12 +6686,8 @@ def _oracle_sql_literal() -> dict[str, str]:
             WHERE (cum * 50) // total
                   > ((cum - affinity_micros) * 50) // total
         """,
-        "semantic_dedup": """
-            WITH m AS (
-                SELECT vec_id, list_transform(embedding::DOUBLE[],
-                           x -> floor(x * 1000000.0 + 0.5)) AS me
-                FROM embeddings
-            ),
+        "semantic_dedup": f"""
+            WITH m AS ({_MQ_SELECT}),
             c AS (
                 SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
                        me AS ce
@@ -6602,35 +6808,8 @@ def _oracle_sql_literal() -> dict[str, str]:
         # separator byte), then the apply tail — encoded types join
         # back onto the (doc, word) stream, per-doc positions by
         # (word pos, symbol pos), ids by (count DESC, token ASC).
-        # string_split(w, '') on '' yields [''] in DuckDB but [] in
-        # Spark — the CASE aligns the empty-word edge.
         "bpe_subword_encode": rf"""
-            WITH wt AS (
-                SELECT w, CAST(count(*) AS BIGINT) AS f FROM (
-                    SELECT unnest({_TOKS}) AS w
-                    FROM documents WHERE text IS NOT NULL
-                ) GROUP BY w
-            ),
-            s0 AS (
-                SELECT w, f, list_concat(
-                    CASE WHEN w = '' THEN []::VARCHAR[]
-                         ELSE string_split(w, '') END,
-                    ['</w>']) AS t
-                FROM wt
-            ),
-            {_bpe_sub_round_ctes(3)},
-            dw AS (
-                SELECT doc_id, CAST(i AS INTEGER) AS wpos, t[i] AS w
-                FROM (SELECT doc_id, {_TOKS} AS t
-                      FROM documents WHERE text IS NOT NULL) dt,
-                     UNNEST(range(1, len(t) + 1)) AS u(i)
-            ),
-            sub AS (
-                SELECT d.doc_id, d.wpos, CAST(j AS INTEGER) AS spos,
-                       s.t[j] AS token
-                FROM dw d JOIN s3 s USING (w),
-                     UNNEST(range(1, len(s.t) + 1)) AS u(j)
-            ),
+            WITH {_BPE_SUB_STREAM_CTES},
             st AS (
                 SELECT doc_id,
                        CAST(row_number() OVER (
@@ -6654,32 +6833,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         # symbol re-emits the in-vocab '</w>' marker after its
         # content bytes; global positions by (wpos, spos, byte pos)
         "bpe_subword_total": rf"""
-            WITH wt AS (
-                SELECT w, CAST(count(*) AS BIGINT) AS f FROM (
-                    SELECT unnest({_TOKS}) AS w
-                    FROM documents WHERE text IS NOT NULL
-                ) GROUP BY w
-            ),
-            s0 AS (
-                SELECT w, f, list_concat(
-                    CASE WHEN w = '' THEN []::VARCHAR[]
-                         ELSE string_split(w, '') END,
-                    ['</w>']) AS t
-                FROM wt
-            ),
-            {_bpe_sub_round_ctes(3)},
-            dw AS (
-                SELECT doc_id, CAST(i AS INTEGER) AS wpos, t[i] AS w
-                FROM (SELECT doc_id, {_TOKS} AS t
-                      FROM documents WHERE text IS NOT NULL) dt,
-                     UNNEST(range(1, len(t) + 1)) AS u(i)
-            ),
-            sub AS (
-                SELECT d.doc_id, d.wpos, CAST(j AS INTEGER) AS spos,
-                       s.t[j] AS token
-                FROM dw d JOIN s3 s USING (w),
-                     UNNEST(range(1, len(s.t) + 1)) AS u(j)
-            ),
+            WITH {_BPE_SUB_STREAM_CTES},
             v AS (
                 SELECT token, tid FROM (
                     SELECT token, CAST(row_number() OVER (
@@ -6765,50 +6919,10 @@ def _oracle_sql_literal() -> dict[str, str]:
         # LEFT JOIN back onto the doc set (the lang_id_joined oracle
         # below does exactly that).
         "lang_id": f"""
-            WITH toks AS (
-                SELECT doc_id, {_TOKS} AS t
-                FROM documents WHERE text IS NOT NULL
-            ),
-            feats AS (
-                SELECT doc_id, unnest(list_concat(
-                    t, list_transform(range(1, len(t)),
-                                      i -> t[i] || ' ' || t[i + 1])
-                )) AS f
-                FROM toks
-            ),
-            fb AS (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5('langid:v1' || f), 1, 7))
-                            ::BIGINT % 256 AS INTEGER) AS b
-                FROM feats
-            ),
-            w AS (
-                SELECT CAST(unnest(range(0, 256)) AS INTEGER) AS b,
-                       {", ".join(
-                           "unnest(["
-                           + ",".join(str(w) for w in _langid_gate_weights(lg))
-                           + f"]) AS w{i}"
-                           for i, lg in enumerate(_LANGID_GATE_LANGS)
-                       )}
-            ),
-            agg AS (
-                SELECT fb.doc_id,
-                       count(*) AS n,
-                       {", ".join(
-                           f"CAST(sum(w{i}) AS BIGINT) // count(*) AS s{i}"
-                           for i in range(len(_LANGID_GATE_LANGS))
-                       )}
-                FROM fb JOIN w USING (b)
-                GROUP BY fb.doc_id
-            )
+            WITH {_langid_agg_ctes(256)}
             SELECT doc_id,
                    CAST(n AS INTEGER) AS n_feats,
-                   CASE {" ".join(
-                       f"WHEN s{i} = greatest(s0, s1, s2, s3) THEN '{lg}'"
-                       for i, lg in enumerate(_LANGID_GATE_LANGS)
-                   )} END AS lang,
-                   CAST(greatest(s0, s1, s2, s3) AS BIGINT)
-                       AS score_micros
+                   {_LANGID_ARGMAX_COLS}
             FROM agg
         """,
         # lang_id_joined: the PRODUCTION broadcast-LUT branch (4 x 512
@@ -6819,53 +6933,10 @@ def _oracle_sql_literal() -> dict[str, str]:
         # n_feats 0, NULL scores, NULL lang) is oracled rather than
         # relying on tokens('') == [''] (r9 advice).
         "lang_id_joined": f"""
-            WITH toks AS (
-                SELECT doc_id, {_TOKS} AS t
-                FROM documents WHERE text IS NOT NULL
-            ),
-            feats AS (
-                SELECT doc_id, unnest(list_concat(
-                    t, list_transform(range(1, len(t)),
-                                      i -> t[i] || ' ' || t[i + 1])
-                )) AS f
-                FROM toks
-            ),
-            fb AS (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5('langid:v1' || f), 1, 7))
-                            ::BIGINT % 512 AS INTEGER) AS b
-                FROM feats
-            ),
-            w AS (
-                SELECT CAST(unnest(range(0, 512)) AS INTEGER) AS b,
-                       {", ".join(
-                           "unnest(["
-                           + ",".join(
-                               str(w)
-                               for w in _langid_gate_weights(lg, 512)
-                           )
-                           + f"]) AS w{i}"
-                           for i, lg in enumerate(_LANGID_GATE_LANGS)
-                       )}
-            ),
-            agg AS (
-                SELECT fb.doc_id,
-                       count(*) AS n,
-                       {", ".join(
-                           f"CAST(sum(w{i}) AS BIGINT) // count(*) AS s{i}"
-                           for i in range(len(_LANGID_GATE_LANGS))
-                       )}
-                FROM fb JOIN w USING (b)
-                GROUP BY fb.doc_id
-            )
+            WITH {_langid_agg_ctes(512)}
             SELECT d.doc_id,
                    CAST(coalesce(agg.n, 0) AS INTEGER) AS n_feats,
-                   CASE {" ".join(
-                       f"WHEN s{i} = greatest(s0, s1, s2, s3) THEN '{lg}'"
-                       for i, lg in enumerate(_LANGID_GATE_LANGS)
-                   )} END AS lang,
-                   CAST(greatest(s0, s1, s2, s3) AS BIGINT)
-                       AS score_micros
+                   {_LANGID_ARGMAX_COLS}
             FROM (SELECT doc_id FROM documents
                   WHERE text IS NOT NULL) d
             LEFT JOIN agg USING (doc_id)
@@ -6897,23 +6968,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         # deliberately different plan shape); weights interpolated
         # from the same _qcls_gate_weights literal as the Spark side
         "quality_classifier": f"""
-            WITH toks AS (
-                SELECT doc_id, {_TOKS} AS t
-                FROM documents WHERE text IS NOT NULL
-            ),
-            feats AS (
-                SELECT doc_id, unnest(list_concat(
-                    t, list_transform(range(1, len(t)),
-                                      i -> t[i] || ' ' || t[i + 1])
-                )) AS f
-                FROM toks
-            ),
-            fb AS (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5('qcls:v1' || f), 1, 7))
-                            ::BIGINT % 256 AS INTEGER) AS b
-                FROM feats
-            ),
+            WITH {_feature_bucket_ctes("qcls:v1", 256)},
             w AS (
                 SELECT CAST(unnest(range(0, 256)) AS INTEGER) AS b,
                        unnest([{",".join(str(w) for w in _qcls_gate_weights())}]) AS wt
@@ -6932,25 +6987,11 @@ def _oracle_sql_literal() -> dict[str, str]:
         # squared-L2 argmin via the dot identity, ties lowest cid)
         # then an md5-ranked exact quota of 25 per cluster — membership
         # pinned, not just counts
-        "cluster_balanced_sample": """
-            WITH mq AS (
-                SELECT vec_id, list_transform(embedding::DOUBLE[],
-                           x -> floor(x * 1000000.0 + 0.5)) AS me
-                FROM embeddings
-            ),
-            cc AS (
-                SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-                       me AS ce
-                FROM (SELECT * FROM mq ORDER BY vec_id LIMIT 8)
-            ),
+        "cluster_balanced_sample": f"""
+            WITH {_COARSE_CTES},
             assign AS (
                 SELECT vec_id, cid FROM (
-                    SELECT m.vec_id, c.cid, row_number() OVER (
-                        PARTITION BY m.vec_id ORDER BY
-                            list_dot_product(c.ce, c.ce)
-                            - 2 * list_dot_product(m.me, c.ce) ASC,
-                            c.cid ASC
-                    ) AS rn
+                    SELECT m.vec_id, c.cid, {_COARSE_RANK}
                     FROM mq m CROSS JOIN cc c
                 ) WHERE rn = 1
             ),
@@ -7185,72 +7226,20 @@ def _oracle_sql_literal() -> dict[str, str]:
               ON t.doc_id = c.doc_id AND t.tpos = c.tpos
             GROUP BY t.doc_id
         """,
-        "pq_codes": """
-            WITH mq AS (
-                SELECT vec_id, list_transform(embedding::DOUBLE[],
-                           x -> floor(x * 1000000.0 + 0.5)) AS me
-                FROM embeddings
-            ),
-            cb AS (
-                SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-                       me AS ce
-                FROM (SELECT * FROM mq ORDER BY vec_id LIMIT 16)
-            ),
-            subs AS (
-                SELECT vec_id, j, list_slice(me, j*8 + 1, j*8 + 8) AS sv
-                FROM mq, UNNEST(range(0, 8)) AS u(j)
-            ),
-            csubs AS (
-                SELECT code, j, list_slice(ce, j*8 + 1, j*8 + 8) AS cv
-                FROM cb, UNNEST(range(0, 8)) AS u(j)
-            )
+        "pq_codes": f"""
+            WITH {_PQ_SUB_CTES}
             -- pq_encode mirror: argmin squared L2, ties -> LOWEST code
             -- (array_min over (dist, code) structs); the dot-identity
             -- form equals Spark's zip_with sum-of-squares exactly
             -- because every intermediate is an integer < 2^53
             SELECT vec_id, CAST(j AS INTEGER) AS subspace, code FROM (
                 SELECT s.vec_id, s.j, CAST(c.code AS INTEGER) AS code,
-                       row_number() OVER (
-                           PARTITION BY s.vec_id, s.j ORDER BY
-                               list_dot_product(s.sv, s.sv)
-                               - 2 * list_dot_product(s.sv, c.cv)
-                               + list_dot_product(c.cv, c.cv) ASC,
-                               c.code ASC
-                       ) AS rn
+                       {_PQ_CODE_RANK}
                 FROM subs s JOIN csubs c ON s.j = c.j
             ) WHERE rn = 1
         """,
-        "pq_topk_adc": """
-            WITH mq AS (
-                SELECT vec_id, list_transform(embedding::DOUBLE[],
-                           x -> floor(x * 1000000.0 + 0.5)) AS me
-                FROM embeddings
-            ),
-            cb AS (
-                SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-                       me AS ce
-                FROM (SELECT * FROM mq ORDER BY vec_id LIMIT 16)
-            ),
-            subs AS (
-                SELECT vec_id, j, list_slice(me, j*8 + 1, j*8 + 8) AS sv
-                FROM mq, UNNEST(range(0, 8)) AS u(j)
-            ),
-            csubs AS (
-                SELECT code, j, list_slice(ce, j*8 + 1, j*8 + 8) AS cv
-                FROM cb, UNNEST(range(0, 8)) AS u(j)
-            ),
-            enc AS (
-                SELECT vec_id, j, code FROM (
-                    SELECT s.vec_id, s.j, c.code, row_number() OVER (
-                        PARTITION BY s.vec_id, s.j ORDER BY
-                            list_dot_product(s.sv, s.sv)
-                            - 2 * list_dot_product(s.sv, c.cv)
-                            + list_dot_product(c.cv, c.cv) ASC,
-                            c.code ASC
-                    ) AS rn
-                    FROM subs s JOIN csubs c ON s.j = c.j
-                ) WHERE rn = 1
-            ),
+        "pq_topk_adc": f"""
+            WITH {_PQ_ENC_CTES},
             q AS (
                 SELECT vec_id AS qid, j, sv AS qv FROM subs
                 WHERE vec_id < 5
@@ -7267,44 +7256,10 @@ def _oracle_sql_literal() -> dict[str, str]:
                 FROM enc e JOIN lut l ON l.j = e.j AND l.code = e.code
                 GROUP BY l.qid, e.vec_id
             )
-            SELECT qid, vec_id, adc_dist FROM (
-                SELECT qid, vec_id, adc_dist, row_number() OVER (
-                    PARTITION BY qid ORDER BY adc_dist ASC, vec_id ASC
-                ) AS rn
-                FROM adc
-            ) WHERE rn <= 10
+            {_ADC_TOP10}
         """,
-        "pq_recall": """
-            WITH mq AS (
-                SELECT vec_id, list_transform(embedding::DOUBLE[],
-                           x -> floor(x * 1000000.0 + 0.5)) AS me
-                FROM embeddings
-            ),
-            cb AS (
-                SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-                       me AS ce
-                FROM (SELECT * FROM mq ORDER BY vec_id LIMIT 16)
-            ),
-            subs AS (
-                SELECT vec_id, j, list_slice(me, j*8 + 1, j*8 + 8) AS sv
-                FROM mq, UNNEST(range(0, 8)) AS u(j)
-            ),
-            csubs AS (
-                SELECT code, j, list_slice(ce, j*8 + 1, j*8 + 8) AS cv
-                FROM cb, UNNEST(range(0, 8)) AS u(j)
-            ),
-            enc AS (
-                SELECT vec_id, j, code FROM (
-                    SELECT s.vec_id, s.j, c.code, row_number() OVER (
-                        PARTITION BY s.vec_id, s.j ORDER BY
-                            list_dot_product(s.sv, s.sv)
-                            - 2 * list_dot_product(s.sv, c.cv)
-                            + list_dot_product(c.cv, c.cv) ASC,
-                            c.code ASC
-                    ) AS rn
-                    FROM subs s JOIN csubs c ON s.j = c.j
-                ) WHERE rn = 1
-            ),
+        "pq_recall": f"""
+            WITH {_PQ_ENC_CTES},
             qs AS (
                 SELECT vec_id AS qid, j, sv AS qv FROM subs
                 WHERE vec_id < 5
@@ -7341,52 +7296,17 @@ def _oracle_sql_literal() -> dict[str, str]:
                     FROM qfull q CROSS JOIN mq e
                 ) WHERE rn <= 10
             ),
-            h AS (
-                SELECT count(*) AS n_hits
-                FROM adc JOIN bf USING (qid, vec_id)
-            )
-            SELECT (SELECT count(DISTINCT qid) FROM qfull) AS n_queries,
-                   h.n_hits,
-                   (h.n_hits * 1000000)
-                       // ((SELECT count(DISTINCT qid) FROM qfull) * 10)
-                       AS recall_micros
-            FROM h
+            {_recall_tail("adc")}
         """,
         "dup_graph_pagerank": rf"""
-            WITH {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
-            pairs AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a JOIN bands b
-                  ON a.band = b.band AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            ),
-            sym AS (
-                SELECT doc_a AS a, doc_b AS b FROM pairs
-                UNION
-                SELECT doc_b, doc_a FROM pairs
-            ),
+            WITH {_LSH_SYM_CTES},
             deg AS (SELECT a, count(*) AS dg FROM sym GROUP BY a),
             pr0 AS (SELECT a AS v, CAST(1000000 AS BIGINT) AS pr FROM deg),
             {_PR_CTES}
             SELECT v AS doc_id, pr AS pr_micros FROM pr3
         """,
-        "ivfpq_topk": _IVFPQ_CTES + """
-            SELECT qid, vec_id, adc_dist FROM (
-                SELECT qid, vec_id, adc_dist, row_number() OVER (
-                    PARTITION BY qid ORDER BY adc_dist ASC, vec_id ASC
-                ) AS rn
-                FROM adc
-            ) WHERE rn <= 10
-        """,
-        "ivfpq_recall": _IVFPQ_CTES + """
+        "ivfpq_topk": _IVFPQ_CTES + _ADC_TOP10,
+        "ivfpq_recall": _IVFPQ_CTES + f"""
             , ivfpq AS (
                 SELECT qid, vec_id FROM (
                     SELECT qid, vec_id, row_number() OVER (
@@ -7410,16 +7330,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                     FROM qfull qf CROSS JOIN mq e
                 ) WHERE rn <= 10
             ),
-            h AS (
-                SELECT count(*) AS n_hits
-                FROM ivfpq JOIN bf USING (qid, vec_id)
-            )
-            SELECT (SELECT count(DISTINCT qid) FROM qfull) AS n_queries,
-                   h.n_hits,
-                   (h.n_hits * 1000000)
-                       // ((SELECT count(DISTINCT qid) FROM qfull) * 10)
-                       AS recall_micros
-            FROM h
+            {_recall_tail("ivfpq")}
         """,
         # nn_confusion_ivfpq: the shared IVF-PQ chain at n_queries=16,
         # then the confusion tail — best NON-SELF candidate per query
@@ -7428,16 +7339,6 @@ def _oracle_sql_literal() -> dict[str, str]:
         # query, so rank-1-of-non-self over all candidates is the
         # identical set.)
         "nn_confusion_ivfpq": _ivfpq_ctes(16) + _NN_CONFUSION_TAIL,
-        # nn_confusion_ivfpq_stored: the STORED-index production shape
-        # must be search-equivalent to the in-scan form, so it shares
-        # the oracle VERBATIM — any divergence between the two Spark
-        # paths (or either path and the chain) fails rows+hash
-        "nn_confusion_ivfpq_stored": _ivfpq_ctes(16) + _NN_CONFUSION_TAIL,
-        # streaming_ivfpq_index: encode is row-local, so the streamed
-        # + compacted index searches identically to the one-shot
-        # batch index — same oracle verbatim (the streaming_pq_index
-        # rationale, stored-layout edition)
-        "streaming_ivfpq_index": _ivfpq_ctes(16) + _NN_CONFUSION_TAIL,
         "incremental_neardup": rf"""
             WITH toks AS (
                 SELECT doc_id, CAST(doc_id % 3 AS INTEGER) AS batch,
@@ -7449,14 +7350,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                        t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
                 FROM toks, UNNEST(range(1, greatest(len(t) - 1, 1))) AS u(i)
             ),
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
+            {_SIG_BAND_CTES},
             bb AS (
                 SELECT bands.*, CAST(doc_id % 3 AS INTEGER) AS batch
                 FROM bands
@@ -7585,49 +7479,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM base b LEFT JOIN d ON b.doc_id = d.doc_id
         """,
         "dedup_keep_best": rf"""
-            WITH RECURSIVE {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
-            pairs AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a JOIN bands b
-                  ON a.band = b.band AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            ),
-            sym AS (
-                SELECT doc_a AS a, doc_b AS b FROM pairs
-                UNION
-                SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(v, r) AS (
-                SELECT a, b FROM sym
-                UNION
-                SELECT reach.v, sym.b FROM reach JOIN sym ON reach.r = sym.a
-            ),
-            cc AS (
-                SELECT v AS doc_id, least(v, min(r)) AS cluster_id
-                FROM reach GROUP BY v
-            ),
-            q AS (
-                SELECT doc_id, floor((
-                    0.4::DOUBLE * least(len(t)::DOUBLE / 100.0::DOUBLE, 1.0::DOUBLE)
-                  + 0.3::DOUBLE * (len(list_distinct(t))::DOUBLE / len(t)::DOUBLE)
-                  + 0.3::DOUBLE * (1.0::DOUBLE
-                        - len(list_filter(t, x -> x IN {_STOP_SQL}))::DOUBLE
-                          / len(t)::DOUBLE)
-                  ) * 10000.0 + 0.5) / 10000.0 AS quality
-                FROM toks
-            ),
-            j AS (
-                SELECT cc.cluster_id, cc.doc_id, q.quality
-                FROM cc JOIN q ON cc.doc_id = q.doc_id
-            ),
+            WITH RECURSIVE {_LSH_CLUSTER_QUALITY_CTES},
             r AS (
                 SELECT *, row_number() OVER (
                     PARTITION BY cluster_id ORDER BY quality DESC, doc_id
@@ -7926,13 +7778,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         "text_quality": rf"""
             WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
-            SELECT doc_id, floor((
-                0.4::DOUBLE * least(len(toks)::DOUBLE / 100.0::DOUBLE, 1.0::DOUBLE)
-              + 0.3::DOUBLE * (len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE)
-              + 0.3::DOUBLE * (1.0::DOUBLE
-                    - len(list_filter(toks, x -> x IN {_STOP_SQL}))::DOUBLE
-                      / len(toks)::DOUBLE)
-              ) * 10000.0 + 0.5) / 10000.0 AS quality
+            SELECT doc_id, {_quality_sql("toks")} AS quality
             FROM t
         """,
         "doc_fingerprints": r"""
@@ -7942,40 +7788,8 @@ def _oracle_sql_literal() -> dict[str, str]:
                    count(*) AS dup_count
             FROM documents GROUP BY 1
         """,
-        "corpus_filter": rf"""
-            WITH t AS (
-                SELECT doc_id, source, {_TOKS} AS toks,
-                       string_split_regex(trim(lower(text)), '\s+') AS ltoks
-                FROM documents
-            ),
-            profiled AS (
-                SELECT doc_id, source,
-                       floor((
-                           0.4::DOUBLE * least(len(toks)::DOUBLE / 100.0::DOUBLE, 1.0::DOUBLE)
-                         + 0.3::DOUBLE * (len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE)
-                         + 0.3::DOUBLE * (1.0::DOUBLE
-                               - len(list_filter(toks, x -> x IN {_STOP_SQL}))::DOUBLE
-                                 / len(toks)::DOUBLE)
-                           ) * 10000.0 + 0.5) / 10000.0 AS quality,
-                       CAST(len(toks) AS INTEGER) AS n_tokens,
-                       len(list_filter(ltoks, x -> x IN ('the','and','of','to','a'))) AS s_en,
-                       len(list_filter(ltoks, x -> x IN ('el','la','de','que','y'))) AS s_es,
-                       len(list_filter(ltoks, x -> x IN ('der','die','und','das','ist'))) AS s_de,
-                       len(list_filter(ltoks, x -> x IN ('le','la','et','les','des'))) AS s_fr
-                FROM t
-            ),
-            kept AS (
-                SELECT * FROM profiled
-                WHERE quality >= 0.5
-                  AND n_tokens BETWEEN 20 AND 2000
-                  AND (CASE
-                        WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr AND s_en > 0
-                            THEN 'en'
-                        WHEN s_es >= s_de AND s_es >= s_fr AND s_es > 0 THEN 'es'
-                        WHEN s_de >= s_fr AND s_de > 0 THEN 'de'
-                        WHEN s_fr > 0 THEN 'fr'
-                        ELSE 'und' END) = 'en'
-            )
+        "corpus_filter": f"""
+            WITH {_profile_kept_ctes("documents")}
             SELECT source, count(*) AS kept_docs,
                    round(avg(quality), 4) AS avg_quality,
                    round(avg(n_tokens), 2) AS avg_tokens
@@ -8057,25 +7871,10 @@ def _oracle_sql_literal() -> dict[str, str]:
         # version rule (commit 3 = the first three mtime-ordered
         # batches, i.e. version%4 <= 2), each emitted for both phases
         # — in-retention reads must be identical across the vacuum
-        "cdc_vacuum": """
-            WITH u AS (
-                SELECT user_id, event_id AS version, value, event_type
-                FROM events
-            ),
-            l AS (
-                SELECT user_id, version, value, event_type,
-                       row_number() OVER (
-                           PARTITION BY user_id ORDER BY version DESC
-                       ) AS rn
-                FROM u
-            ),
-            c3 AS (
-                SELECT user_id, version, value, event_type,
-                       row_number() OVER (
-                           PARTITION BY user_id ORDER BY version DESC
-                       ) AS rn
-                FROM u WHERE version % 4 <= 2
-            ),
+        "cdc_vacuum": f"""
+            WITH {_CDC_UPDATES_CTE},
+            {_cdc_version_ranked("l")},
+            {_cdc_version_ranked("c3", "version % 4 <= 2")},
             snaps AS (
                 SELECT 'latest' AS snap, user_id, version, value
                 FROM l WHERE rn = 1 AND event_type <> 'error'
@@ -8087,25 +7886,10 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM snaps s
             CROSS JOIN (VALUES ('pre_vacuum'), ('post_vacuum')) p(phase)
         """,
-        "cdc_time_travel": """
-            WITH u AS (
-                SELECT user_id, event_id AS version, value, event_type
-                FROM events
-            ),
-            l AS (
-                SELECT user_id, version, value, event_type,
-                       row_number() OVER (
-                           PARTITION BY user_id ORDER BY version DESC
-                       ) AS rn
-                FROM u
-            ),
-            a AS (
-                SELECT user_id, version, value, event_type,
-                       row_number() OVER (
-                           PARTITION BY user_id ORDER BY version DESC
-                       ) AS rn
-                FROM u WHERE version % 4 <= 1
-            )
+        "cdc_time_travel": f"""
+            WITH {_CDC_UPDATES_CTE},
+            {_cdc_version_ranked("l")},
+            {_cdc_version_ranked("a", "version % 4 <= 1")}
             SELECT 'latest' AS snap, user_id, version, value
             FROM l WHERE rn = 1 AND event_type <> 'error'
             UNION ALL
@@ -8380,30 +8164,18 @@ def _oracle_sql_literal() -> dict[str, str]:
             ),
             scored AS (
                 SELECT doc_id,
-                   {_LANG_SCORES}
+                   {_lang_scores_sql("toks")}
                 FROM t
             ),
             pred AS (
-                SELECT CASE
-                    WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr AND s_en > 0
-                        THEN 'en'
-                    WHEN s_es >= s_de AND s_es >= s_fr AND s_es > 0 THEN 'es'
-                    WHEN s_de >= s_fr AND s_de > 0 THEN 'de'
-                    WHEN s_fr > 0 THEN 'fr'
-                    ELSE 'und' END AS lang_pred
+                SELECT {_LANG_ARGMAX} AS lang_pred
                 FROM scored
             )
             SELECT lang_pred, count(*) AS doc_count FROM pred GROUP BY lang_pred
         """,
         "ngram_jaccard": rf"""
             WITH {_SHINGLE_CTES},
-            sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-            pairs AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-                FROM sh a JOIN sh b
-                  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            )
+            {_shingle_overlap_ctes("sh")}
             SELECT doc_a, doc_b, common,
                    round(common / (sa.n + sb.n - common), 4) AS jaccard
             FROM pairs
@@ -8419,13 +8191,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             kept AS (
                 SELECT sh.doc_id, sh.shingle FROM sh JOIN freq USING (shingle)
             ),
-            sizes AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
-            pairs AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-                FROM kept a JOIN kept b
-                  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            )
+            {_shingle_overlap_ctes("kept")}
             SELECT doc_a, doc_b, common,
                    round(common / (sa.n + sb.n - common), 4) AS jaccard
             FROM pairs
@@ -8434,74 +8200,15 @@ def _oracle_sql_literal() -> dict[str, str]:
             WHERE round(common / (sa.n + sb.n - common), 4) >= 0.05
         """,
         "minhash_pairs": rf"""
-            WITH {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            )
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+            WITH {_LSH_BAND_CTES}
+            {_lsh_pairs_select()}
         """,
         "dedup_clusters": rf"""
-            WITH RECURSIVE {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
-            pairs AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a JOIN bands b
-                  ON a.band = b.band AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            ),
-            sym AS (
-                SELECT doc_a AS a, doc_b AS b FROM pairs
-                UNION
-                SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(v, r) AS (
-                SELECT a, b FROM sym
-                UNION
-                SELECT reach.v, sym.b FROM reach JOIN sym ON reach.r = sym.a
-            )
-            SELECT v AS doc_id, least(v, min(r)) AS cluster_id
-            FROM reach GROUP BY v
+            WITH RECURSIVE {_LSH_REACH_CTES}
+            {_LSH_CC_SELECT}
         """,
         "fuzzy_dedup_corpus": rf"""
-            WITH RECURSIVE {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
-            pairs AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a JOIN bands b
-                  ON a.band = b.band AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            ),
-            sym AS (
-                SELECT doc_a AS a, doc_b AS b FROM pairs
-                UNION
-                SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(v, r) AS (
-                SELECT a, b FROM sym
-                UNION
-                SELECT reach.v, sym.b FROM reach JOIN sym ON reach.r = sym.a
-            ),
+            WITH RECURSIVE {_LSH_REACH_CTES},
             losers AS (
                 SELECT v AS doc_id FROM reach
                 GROUP BY v HAVING least(v, min(r)) != v
@@ -8514,37 +8221,13 @@ def _oracle_sql_literal() -> dict[str, str]:
             ORDER BY source
         """,
         "simhash": rf"""
-            WITH tok AS (
-                SELECT doc_id, unnest({_TOKS}) AS token FROM documents
-            ),
-            h AS (
-                SELECT doc_id,
-                       ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
-                FROM tok
-            ),
-            bits AS (
-                SELECT doc_id,
-                   {_SIMHASH_BIT_AGGS}
-                FROM h GROUP BY doc_id
-            )
+            WITH {_SIMHASH_BITS_CTES}
             SELECT doc_id,
                    {_SIMHASH_ASSEMBLE} AS simhash
             FROM bits
         """,
         "simhash_near_dup": rf"""
-            WITH tok AS (
-                SELECT doc_id, unnest({_TOKS}) AS token FROM documents
-            ),
-            h AS (
-                SELECT doc_id,
-                       ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
-                FROM tok
-            ),
-            bits AS (
-                SELECT doc_id,
-                   {_SIMHASH_BIT_AGGS}
-                FROM h GROUP BY doc_id
-            ),
+            WITH {_SIMHASH_BITS_CTES},
             sig AS (
                 SELECT doc_id,
                        {_SIMHASH_ASSEMBLE} AS simhash
@@ -8567,18 +8250,13 @@ def _oracle_sql_literal() -> dict[str, str]:
             ORDER BY cosine_sim DESC, vec_id ASC
             LIMIT 10
         """,
-        "ivf_topk_recall": """
+        "ivf_topk_recall": f"""
             -- integer-micros quantization (floor(x*1e6+0.5), scalar op)
             -- makes every dot/norm an EXACT integer sum < 2^53: numpy,
             -- Spark and DuckDB agree bit-for-bit regardless of
             -- summation order, so the rankings below are deterministic
             -- mirrors, not drift-prone float re-derivations
-            WITH mq AS (
-                SELECT vec_id,
-                       list_transform(embedding::DOUBLE[],
-                           x -> floor(x * 1000000.0 + 0.5)) AS me
-                FROM embeddings
-            ),
+            WITH {_MQ_CTE},
             q AS (
                 SELECT vec_id AS qid, me AS qe FROM mq WHERE vec_id < 5
             ),
@@ -8658,11 +8336,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         # bit_count on the packed BIGINT, and candidates rank by the
         # same rounded cosine as the brute-force mirror
         "lsh_topk_recall": f"""
-            WITH mq AS (
-                SELECT vec_id, list_transform(embedding::DOUBLE[],
-                           x -> floor(x * 1000000.0 + 0.5)) AS me
-                FROM embeddings
-            ),
+            WITH {_MQ_CTE},
             q AS (SELECT vec_id AS qid, me AS qe FROM mq WHERE vec_id < 5),
             sigs AS (
                 SELECT vec_id, me, {_lsh_sig_sql("me")} AS sig FROM mq
@@ -8707,15 +8381,6 @@ def _oracle_sql_literal() -> dict[str, str]:
                    (h.n_hits * 1000000) // ((SELECT count(*) FROM q) * 10)
                        AS recall_micros
             FROM h
-        """,
-        "ivf_topk_exhaustive": """
-            SELECT vec_id,
-                   round(list_cosine_similarity(embedding::DOUBLE[],
-                       (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)),
-                       6) AS cosine_sim
-            FROM embeddings
-            ORDER BY cosine_sim DESC, vec_id ASC
-            LIMIT 10
         """,
         "knn_join": """
             WITH q AS (
@@ -9338,13 +9003,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             ), prof AS (
                 SELECT source, lang,
                        len(toks)::BIGINT AS nt,
-                       floor((
-                           0.4::DOUBLE * least(len(toks)::DOUBLE / 100.0::DOUBLE, 1.0::DOUBLE)
-                         + 0.3::DOUBLE * (len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE)
-                         + 0.3::DOUBLE * (1.0::DOUBLE
-                               - len(list_filter(toks, x -> x IN {_STOP_SQL}))::DOUBLE
-                                 / len(toks)::DOUBLE)
-                           ) * 10000.0 + 0.5) / 10000.0 AS q
+                       {_quality_sql("toks")} AS q
                 FROM t
             )
             SELECT source,
@@ -9714,9 +9373,6 @@ def _oracle_sql_literal() -> dict[str, str]:
                        AS revenue_share_pct
             FROM t
         """,
-        "streaming_dedup_keys": """
-            SELECT DISTINCT user_id, event_type FROM events
-        """,
         "streaming_click_purchase": """
             SELECT c.user_id, c.event_id AS click_id,
                    p.event_id AS purchase_id
@@ -9753,14 +9409,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM numbered
             GROUP BY user_id, sid
         """,
-        "above_avg_customers": """
-            SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
-            FROM customer c
-            WHERE c.c_acctbal > (
-                SELECT avg(c2.c_acctbal) FROM customer c2
-                WHERE c2.c_nationkey = c.c_nationkey
-            )
-        """,
+        "above_avg_customers": _ABOVE_AVG_CUSTOMERS_SQL,
         "schema_evolution_roundtrip": """
             SELECT event_type,
                    count(*) AS record_count,
@@ -9772,35 +9421,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM events GROUP BY event_type
         """,
         "cluster_safe_split": rf"""
-            WITH RECURSIVE {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
-            pairs AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a JOIN bands b
-                  ON a.band = b.band AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            ),
-            sym AS (
-                SELECT doc_a AS a, doc_b AS b FROM pairs
-                UNION
-                SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(v, r) AS (
-                SELECT a, b FROM sym
-                UNION
-                SELECT reach.v, sym.b FROM reach JOIN sym ON reach.r = sym.a
-            ),
-            cc AS (
-                SELECT v AS doc_id, least(v, min(r)) AS cluster_id
-                FROM reach GROUP BY v
-            ),
+            WITH RECURSIVE {_LSH_CC_CTES},
             tagged AS (
                 SELECT d.source,
                        coalesce(cc.cluster_id, d.doc_id) AS unit
@@ -9856,21 +9477,8 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM t, v
         """,
         "dedup_graph_stats": rf"""
-            WITH {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
-            e AS (
-                SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-                FROM bands a JOIN bands b
-                  ON a.band = b.band AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            ),
+            WITH {_LSH_BAND_CTES},
+            e AS ({_lsh_pairs_select("a", "b")}),
             deg AS (
                 SELECT v, count(*) AS deg FROM (
                     SELECT a AS v FROM e UNION ALL SELECT b FROM e
@@ -9964,49 +9572,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             GROUP BY 1, 2
         """,
         "corpus_pipeline_fuzzy": rf"""
-            WITH RECURSIVE {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
-            pairs AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a JOIN bands b
-                  ON a.band = b.band AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            ),
-            sym AS (
-                SELECT doc_a AS a, doc_b AS b FROM pairs
-                UNION
-                SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(v, r) AS (
-                SELECT a, b FROM sym
-                UNION
-                SELECT reach.v, sym.b FROM reach JOIN sym ON reach.r = sym.a
-            ),
-            cc AS (
-                SELECT v AS doc_id, least(v, min(r)) AS cluster_id
-                FROM reach GROUP BY v
-            ),
-            q AS (
-                SELECT doc_id, floor((
-                    0.4::DOUBLE * least(len(t)::DOUBLE / 100.0::DOUBLE, 1.0::DOUBLE)
-                  + 0.3::DOUBLE * (len(list_distinct(t))::DOUBLE / len(t)::DOUBLE)
-                  + 0.3::DOUBLE * (1.0::DOUBLE
-                        - len(list_filter(t, x -> x IN {_STOP_SQL}))::DOUBLE
-                          / len(t)::DOUBLE)
-                  ) * 10000.0 + 0.5) / 10000.0 AS quality
-                FROM toks
-            ),
-            j AS (
-                SELECT cc.cluster_id, cc.doc_id, q.quality
-                FROM cc JOIN q ON cc.doc_id = q.doc_id
-            ),
+            WITH RECURSIVE {_LSH_CLUSTER_QUALITY_CTES},
             winners AS (
                 SELECT doc_id FROM (
                     SELECT doc_id, row_number() OVER (
@@ -10206,11 +9772,6 @@ def _oracle_sql_literal() -> dict[str, str]:
             SELECT 'dead_letter', count(*), NULL
             FROM r WHERE i % 11 = 0
         """,
-        "streaming_to_table_roundtrip": """
-            SELECT event_type, count(*) AS record_count,
-                   (sum(value::DECIMAL(20,6)))::DOUBLE AS value_sum
-            FROM events GROUP BY event_type
-        """,
         "http_ingest_simulated": """
             WITH r AS (
                 SELECT range AS i,
@@ -10229,13 +9790,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         "ngram_containment": rf"""
             WITH {_SHINGLE_CTES},
-            sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-            pairs AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-                FROM sh a JOIN sh b
-                  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            ),
+            {_shingle_overlap_ctes("sh")},
             scored AS (
                 SELECT doc_a, doc_b, common,
                        floor(common::DOUBLE / sa.n::DOUBLE * 10000.0 + 0.5)
@@ -10250,21 +9805,8 @@ def _oracle_sql_literal() -> dict[str, str]:
             WHERE containment_a >= 0.5 OR containment_b >= 0.5
         """,
         "lsh_rescore_tfidf": rf"""
-            WITH {_SHINGLE_CTES},
-            sig AS (
-                SELECT doc_id,
-                   {_MINHASH_AGGS}
-                FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-            {_BAND_SELECTS}
-            ),
-            cand AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a JOIN bands b
-                  ON a.band = b.band AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            ),
+            WITH {_LSH_BAND_CTES},
+            cand AS ({_lsh_pairs_select()}),
             tk AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
             tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
             dfq AS (SELECT term, count(*) AS doc_freq FROM tf GROUP BY term),
@@ -10529,15 +10071,6 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM nn WHERE rn = 1 GROUP BY label, nn_label
         """,
         "embedding_near_dup": """
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_cosine_similarity(
-                       a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-                       AS cosine_sim
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(
-                      a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.35
-        """,
-        "embedding_near_dup_gemm": """
             SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                    round(list_cosine_similarity(
                        a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)

@@ -1,5 +1,4 @@
 from .banding import AQI_BANDS, TEMP_BANDS, aqi_band, band, temp_category
-from .jsonio import extract_props, to_json_payload
 from .scoring import POLLUTION_WEIGHTS, pollution_score, weighted_score
 from .timeparts import calendar_parts, with_calendar_parts
 
@@ -10,8 +9,6 @@ __all__ = [
     "aqi_band",
     "band",
     "temp_category",
-    "extract_props",
-    "to_json_payload",
     "pollution_score",
     "weighted_score",
     "calendar_parts",

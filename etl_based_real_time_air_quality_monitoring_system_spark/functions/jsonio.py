@@ -2,30 +2,16 @@
 
 The reference JSON-serializes at the Kafka boundary
 (``producer.py:24``, ``consumer.py:53``) and flattens the nested
-WeatherAPI document imperatively (``producer.py:73-89``).  Spark-native
-equivalents: ``to_json(struct(*))`` on the way out, ``from_json`` +
-nested projection on the way in — both codegen'd, no Python.
+WeatherAPI document imperatively (``producer.py:73-89``).  The
+Spark-native decode is ``from_json`` + one nested projection —
+codegen'd, no Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..schemas import WEATHER_API_SCHEMA
-
-
-def to_json_payload(*cols: str) -> Column:
-    """F9 encode — ``to_json(struct(...))``; all columns when empty."""
-    return F.to_json(F.struct(*cols)) if cols else F.to_json(F.struct("*"))
-
-
-def extract_props(col: Column | str, schema: T.StructType, field: str) -> Column:
-    """F9 decode + P6 nested projection: parse a JSON string column and
-    pull one field.  PERMISSIVE by default — malformed JSON yields null
-    (T9 error isolation)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.from_json(c, schema)[field]
 
 
 def flatten_weather_doc(df: DataFrame, payload_col: str = "payload") -> DataFrame:

@@ -1,4 +1,4 @@
-"""Calendar decomposition of event time (SURVEY.md §2.8 F3-F5).
+"""Calendar decomposition of event time (SURVEY.md §2.8 F4-F5).
 
 Reference extracts ``year/month/day/hour`` from a string timestamp via
 ``to_timestamp`` at analysis time (``spark_processor.py:107-119``) and
@@ -32,8 +32,3 @@ def with_calendar_parts(
     so the projection collapses to one Project node."""
     c: Column = F.to_timestamp(F.col(ts)) if parse_string else F.col(ts)
     return df.withColumns(calendar_parts(c))
-
-
-def with_processing_date(df: DataFrame, name: str = "processing_date") -> DataFrame:
-    """F3 — job-run date stamp (spark_processor.py:104-106)."""
-    return df.withColumn(name, F.current_date())

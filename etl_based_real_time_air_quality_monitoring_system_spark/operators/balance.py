@@ -26,12 +26,12 @@ logger = logging.getLogger(__name__)
 
 #: inputs larger than this are never rebalanced (they parallelize
 #: naturally and a round-robin shuffle of raw text would be pure cost)
-DEFAULT_MAX_BYTES = 512 * 1024 * 1024
+MAX_BYTES = 512 * 1024 * 1024
 
 
-def spread_small_input(df: DataFrame, max_bytes: int = DEFAULT_MAX_BYTES) -> DataFrame:
+def spread_small_input(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to default parallelism iff it is small
-    (optimizer size estimate <= ``max_bytes``) and has fewer
+    (optimizer size estimate <= ``MAX_BYTES``) and has fewer
     partitions than the session can run concurrently.
 
     Streaming DataFrames are returned untouched (partition probes and
@@ -52,6 +52,6 @@ def spread_small_input(df: DataFrame, max_bytes: int = DEFAULT_MAX_BYTES) -> Dat
     except Exception as e:  # private-API seam: degrade, don't fail
         logger.warning("spread_small_input: size probe failed (%s); skipping", e)
         return df
-    if size > max_bytes:
+    if size > MAX_BYTES:
         return df
     return df.repartition(target)

@@ -341,30 +341,6 @@ def rolling_fingerprint(
     )
 
 
-def lang_scores_of(
-    ltoks: Column, markers: Mapping[str, Sequence[str]] | None = None
-) -> dict[str, Column]:
-    """Per-language marker-hit counts over pre-tokenized LOWERCASED
-    tokens (the language-ID evidence)."""
-    markers = markers or LANG_MARKERS
-
-    def hit_counter(words: Sequence[str]):
-        # single-arg lambda: F.filter treats a 2-arg callable as
-        # (element, index), so a default-arg trick would break
-        return lambda t: t.isin(*words)
-
-    return {
-        lang: F.size(F.filter(ltoks, hit_counter(words)))
-        for lang, words in markers.items()
-    }
-
-
-def lang_scores(text: Column | str, markers: Mapping[str, Sequence[str]] | None = None) -> dict[str, Column]:
-    return lang_scores_of(
-        tokens(F.lower(F.col(text) if isinstance(text, str) else text)), markers
-    )
-
-
 def lang_id_of(
     ltoks: Column, markers: Mapping[str, Sequence[str]] | None = None
 ) -> Column:
@@ -418,33 +394,6 @@ def lang_id(text: Column | str, markers: Mapping[str, Sequence[str]] | None = No
     return lang_id_of(
         tokens(F.lower(F.col(text) if isinstance(text, str) else text)), markers
     )
-
-
-def with_text_stats(df: DataFrame, text: str = "text") -> DataFrame:
-    """Text profile: counts, ratios, quality, fingerprint, predicted
-    language — tokenized once per casing via the ``_of`` family (the
-    multiply-referenced alias keeps Catalyst from inlining the split
-    back into every metric)."""
-    toks, ltoks = "_toks", "_ltoks"
-    df = spread_small_input(df)
-    tokenized = df.withColumns(
-        {
-            toks: tokens(text),
-            ltoks: tokens(F.lower(F.col(text))),
-        }
-    )
-    return tokenized.withColumns(
-        {
-            "n_chars_measured": char_count(text),
-            "n_tokens": token_count_of(F.col(toks)),
-            "n_tokens_bpe": bpe_ish_token_count(text),
-            "n_distinct_tokens": distinct_token_count_of(F.col(toks)),
-            "n_stopwords": stopword_count_of(F.col(toks)),
-            "quality": quality_score_of(F.col(toks)),
-            "fingerprint": fingerprint(text),
-            "lang_pred": lang_id_of(F.col(ltoks)),
-        }
-    ).drop(toks, ltoks)
 
 
 def chunk_documents(

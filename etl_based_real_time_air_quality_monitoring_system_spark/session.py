@@ -69,21 +69,19 @@ def prepare(spark: SparkSession) -> SparkSession:
 def get_session(
     app_name: str = "aq-spark-engine",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's local session.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
-    ``shuffle_partitions`` defaults to the core count — the guide's
-    local-mode sizing; on a real cluster you would size it to
-    ~2-3x total executor cores and let AQE coalesce.
+    Shuffle partitions equal the core count — the guide's local-mode
+    sizing; on a real cluster you would size them to ~2-3x total
+    executor cores and let AQE coalesce.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

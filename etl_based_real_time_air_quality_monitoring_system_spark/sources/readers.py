@@ -100,10 +100,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
 ) -> None:

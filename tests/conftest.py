@@ -9,7 +9,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session("tests", cpus=8, shuffle_partitions=8)
+    s = get_session("tests", cpus=8)
     yield s
     s.stop()
 

@@ -825,7 +825,8 @@ def test_time_operators_accept_both_timestamp_types(spark):
     assert sessions[1] == sessions[2] == 1 and sessions[3] == 2
 
 
-def test_spread_small_input_rebalances_only_small(spark, sf_dir):
+def test_spread_small_input_rebalances_only_small(spark, sf_dir, monkeypatch):
+    from etl_based_real_time_air_quality_monitoring_system_spark.operators import balance
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.balance import spread_small_input
     from etl_based_real_time_air_quality_monitoring_system_spark.sources.readers import load_table
 
@@ -835,7 +836,9 @@ def test_spread_small_input_rebalances_only_small(spark, sf_dir):
     spread = spread_small_input(docs)
     assert spread.rdd.getNumPartitions() == target
     # over-the-size-bound input is left untouched (no shuffle added)
-    assert spread_small_input(docs, max_bytes=0) is docs
+    monkeypatch.setattr(balance, "MAX_BYTES", 0)
+    assert spread_small_input(docs) is docs
+    monkeypatch.undo()
     # already-parallel input is left untouched
     wide = docs.repartition(target)
     assert spread_small_input(wide) is wide
