@@ -6,26 +6,72 @@ group transitively-linked documents into clusters and keep one
 canonical doc per cluster.  That grouping is connected components —
 the one step of the dedup family that is inherently iterative.
 
-Scale design (100 TB): hash-to-min label propagation with pointer
+Small graphs finish on the driver: once the symmetric edge set is
+materialized, one job fetches at most ``DRIVER_MAX_EDGES + 1`` of its
+undirected edges, and if they are all of them a union-find labels the
+components in the driver process.  That is the "finish small" step of
+the MapReduce small-star/large-star family (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14), applied
+before the first round: every shipped input (the dedup candidate
+graph is ~11k edges at sf0.1) takes it, and a graph that is small in
+edges pays one job instead of one job per round plus the per-job
+scheduling overhead that dominated at this size.
+
+Larger graphs run hash-to-min label propagation with pointer
 jumping.  Each round is two hash-shuffles of the (vertex, label)
 table — join labels onto the edge list and take the min neighbor
 label, then one label-table self-join that short-circuits chains
 (label <- label(label)).  Min-neighbor alone needs O(diameter)
-rounds; the pointer jump makes long chains collapse in O(log d)
-rounds (cf. the MapReduce small-star/large-star family, Kiveris et
-al., "Connected Components in MapReduce and Beyond", SoCC'14).  LSH
-duplicate clusters are near-cliques (diameter 1-2), so in practice
-2-3 rounds converge.  The edge set and each round's tables cut
-lineage with localCheckpoint so per-round plans stay O(round body)
-instead of re-embedding (and re-analyzing) the candidate-pair
-pipeline, and each round runs exactly ONE job: the convergence
-answer rides on a flag column aggregated over the round's
+rounds; the pointer jump short-cuts label chains, though a path whose
+ids are in shuffled order still needs about n/4 rounds (CHANGES.md,
+FOUND).  LSH duplicate clusters are near-cliques (diameter 1-2), so
+in practice 2-3 rounds converge.  The edge set and each round's
+tables cut lineage with localCheckpoint so per-round plans stay
+O(round body) instead of re-embedding (and re-analyzing) the
+candidate-pair pipeline, and each round runs exactly ONE job: the
+convergence answer rides on a flag column aggregated over the round's
 checkpoint (r13).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
+
+#: Graphs with at most this many undirected edges are labelled on the
+#: driver.  Sized from the crossover table in CHANGES.md: the driver
+#: path wins at every size measured up to 1M edges (by 1.2x on
+#: 2-round near-cliques, 5x on 14-round random graphs), and at the cap
+#: the fetch is 2M id pairs (32 MB of longs) and the driver's Python
+#: process peaked ~400 MB above its baseline.
+DRIVER_MAX_EDGES = 2_000_000
+
+
+def _min_root_labels(pairs) -> list[tuple]:
+    """(vertex, component) by union-find over (a, b) pairs, linking the
+    larger root under the smaller so every root is its component's
+    minimum id.  A pair with a NULL endpoint contributes only its
+    non-NULL endpoint, as a vertex of its own."""
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while x != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        if a is None or b is None:
+            for v in (a, b):
+                if v is not None:
+                    find(v)
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(v, find(v)) for v in parent]
 
 
 def connected_components(
@@ -41,10 +87,21 @@ def connected_components(
 
     Only vertices that appear in an edge are returned (isolated docs
     are their own trivial cluster and never enter the pair graph).
+    NULL is never a vertex: the non-NULL endpoint of an edge with a
+    NULL endpoint is returned as a vertex (its own component unless
+    other edges join it), and an all-NULL edge contributes nothing.  A
+    self-loop's vertex is its own component.
+
+    Graphs with at most ``DRIVER_MAX_EDGES`` undirected edges are
+    labelled on the driver by a union-find after one fetch job, and
+    the labels come back as a DataFrame over that driver-side list.
+    Larger graphs run the distributed rounds, one job each.  Both
+    paths return the same labels.
 
     Pass a dict as ``stats`` to receive ``{"rounds": r}`` — the number
     of propagation rounds run before the convergence check fired (the
     scaling probe reports it; O(log diameter) by the pointer jump).
+    It is 0 when the graph finished on the driver.
     """
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # EAGER lineage cut, not persist: a persisted frame keeps its full
@@ -58,6 +115,29 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    # finish small: each undirected edge once (a <= b keeps one
+    # direction; a NULL comparison keeps the row), read by ONE task so
+    # the limit cannot fan out into incremental take() jobs, and
+    # fetched as Arrow (8x faster than collect() at 1M edges)
+    fetched = (
+        sym.filter(F.coalesce(F.col("a") <= F.col("b"), F.lit(True)))
+        .coalesce(1)
+        .limit(DRIVER_MAX_EDGES + 1)
+        .toArrow()
+    )
+    if fetched.num_rows <= DRIVER_MAX_EDGES:
+        if stats is not None:
+            stats["rounds"] = 0
+        pairs = zip(
+            fetched.column("a").to_pylist(), fetched.column("b").to_pylist()
+        )
+        vtype = sym.schema["a"].dataType
+        return sym.sparkSession.createDataFrame(
+            _min_root_labels(pairs),
+            StructType(
+                [StructField("vertex", vtype), StructField("component", vtype)]
+            ),
+        )
     labels = sym.select(F.col("a").alias("v")).distinct().withColumn(
         "label", F.col("v")
     )

@@ -104,9 +104,27 @@ def test_simhash_near_pairs(planted):
     assert (3, 4) not in pairs
 
 
-def test_connected_components_chain_and_islands(spark):
+@pytest.fixture(params=["driver", "distributed"])
+def cc_path(request, monkeypatch):
+    """Run connected_components on one labelling path: every shipped
+    input finishes on the driver, so the distributed rounds are forced
+    by a zero edge cap."""
+    from etl_based_real_time_air_quality_monitoring_system_spark.operators import graph
+
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    return request.param
+
+
+def _cc(edges, **kw):
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.graph import connected_components
 
+    stats: dict = {}
+    out = connected_components(edges, "src", "dst", stats=stats, **kw)
+    return out, stats
+
+
+def test_connected_components_chain_and_islands(spark, cc_path):
     # one 12-node chain (worst case for plain min-propagation — the
     # pointer jump must collapse it in O(log n) rounds), one triangle,
     # one isolated pair; edges deliberately unsorted/reversed
@@ -114,14 +132,80 @@ def test_connected_components_chain_and_islands(spark):
     tri = [(100, 101), (101, 102), (102, 100)]
     pair = [(201, 200)]
     edges = spark.createDataFrame(chain + tri + pair, "src bigint, dst bigint")
-    got = {
-        r.vertex: r.component
-        for r in connected_components(edges, "src", "dst", max_iter=6).collect()
-    }
+    out, stats = _cc(edges, max_iter=6)
+    got = {r.vertex: r.component for r in out.collect()}
     assert {v for v in got if got[v] == 0} == set(range(12))
     assert {v for v in got if got[v] == 100} == {100, 101, 102}
     assert {v for v in got if got[v] == 200} == {200, 201}
     assert len(got) == 17
+    # the stats contract: no propagation rounds when the driver finishes
+    assert (stats["rounds"] == 0) == (cc_path == "driver")
+
+
+def test_connected_components_null_endpoints_and_self_loops(spark, cc_path):
+    # NULL is never a vertex; the non-NULL endpoint of a NULL edge is a
+    # singleton; an all-NULL edge contributes nothing; a self-loop's
+    # vertex is its own component
+    edges = spark.createDataFrame(
+        [(None, 5), (5, 6), (7, None), (None, None), (9, 9)],
+        "src bigint, dst bigint",
+    )
+    out, _ = _cc(edges)
+    assert out.schema.simpleString() == "struct<vertex:bigint,component:bigint>"
+    assert sorted(tuple(r) for r in out.collect()) == [(5, 5), (6, 5), (7, 7), (9, 9)]
+
+
+def _random_graph(seed: int) -> list[tuple[int, int]]:
+    """~200 edges: two chains laid out in shuffled id order (so labels
+    must travel far), 4-cliques and random cross links.  Kept small in
+    rounds: a shuffled-id chain of n vertices needs about n/4 rounds
+    on the distributed path, and each round costs more planning than
+    the last (see CHANGES.md)."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(10_000), 160)
+    edges = []
+    for lo, hi in ((0, 20), (20, 32)):  # two chains
+        edges += [(ids[i], ids[i + 1]) for i in range(lo, hi - 1)]
+    for c in range(32, 152, 4):  # 4-cliques
+        edges += [(ids[a], ids[b]) for a in range(c, c + 4) for b in range(a + 1, c + 4)]
+    edges += [(rng.choice(ids), rng.choice(ids)) for _ in range(8)]
+    rng.shuffle(edges)
+    return [(a, b) if rng.random() < 0.5 else (b, a) for a, b in edges]
+
+
+def _reference_components(edges: list[tuple[int, int]]) -> dict[int, int]:
+    """Minimum id per component by breadth-first search."""
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label: dict[int, int] = {}
+    for start in adj:
+        if start in label:
+            continue
+        comp, frontier = {start}, [start]
+        while frontier:
+            frontier = [n for v in frontier for n in adj[v] if n not in comp]
+            comp.update(frontier)
+        for v in comp:
+            label[v] = min(comp)
+    return label
+
+
+@pytest.mark.parametrize("seed", [3, 4])
+def test_connected_components_paths_agree_on_random_graphs(spark, monkeypatch, seed):
+    from etl_based_real_time_air_quality_monitoring_system_spark.operators import graph
+
+    pairs = _random_graph(seed)
+    edges = spark.createDataFrame(pairs, "src bigint, dst bigint")
+    want = _reference_components(pairs)
+    driver = {r.vertex: r.component for r in _cc(edges)[0].collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    distributed = {r.vertex: r.component for r in _cc(edges)[0].collect()}
+    assert driver == want
+    assert distributed == want
 
 
 def test_contamination_check_overlap(spark):

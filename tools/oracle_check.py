@@ -31,6 +31,14 @@ from etl_based_real_time_air_quality_monitoring_system_spark.sources.readers imp
     TESTDATA_TABLES,
 )
 
+#: DuckDB runs inside this process next to the Spark driver's JVM, and
+#: its default limit (80% of RAM) let one sf0.1 oracle take the checker
+#: past 11 GB until the kernel killed it.  6 GB is what the heaviest
+#: oracle that completes at sf0.1 (dup_graph_pagerank) needs; operators
+#: that can spill go to TEMP_DIR instead of growing further.
+DUCKDB_MEMORY_LIMIT = "6GB"
+DUCKDB_TEMP_DIR = "/tmp/oracle_check_duckdb"
+
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Columns sorted by name, values canonicalized, rows sorted."""
@@ -140,7 +148,9 @@ def main() -> int:
 
 def run_one(sf_dir: str, args: list[str]) -> int:
     spark = get_session("oracle-check")
-    con = duckdb.connect()
+    con = duckdb.connect(
+        config={"memory_limit": DUCKDB_MEMORY_LIMIT, "temp_directory": DUCKDB_TEMP_DIR}
+    )
     for t in TESTDATA_TABLES:
         con.sql(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "

@@ -31,12 +31,15 @@ SKIP_PREFIX = "streaming_"  # calling these runs an actual stream
 #: per-round shape in prose instead of a misleading 0-shuffle row
 ITERATIVE = {
     "dedup_clusters": (
-        "iterative: 2 hash-shuffles + 1 self-join per round, "
-        "O(log d) rounds (graph.connected_components)"
+        "iterative: edge set fetched in 1 job and labelled by a "
+        "driver union-find up to 2M edges, else 2 hash-shuffles + "
+        "1 self-join per round, O(log d) rounds "
+        "(graph.connected_components)"
     ),
     "fuzzy_dedup_corpus": (
-        "iterative: connected-components rounds, then anti-join "
-        "losers + grouped survivor accounting"
+        "iterative: connected components (driver union-find up to "
+        "2M edges, else rounds), then anti-join losers + grouped "
+        "survivor accounting"
     ),
     "incremental_neardup": (
         "sequential fold: 3 ingest-batch steps, each a band-bucket "

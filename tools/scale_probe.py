@@ -511,33 +511,45 @@ def probes(spark, sf_dir: str, factor: int) -> dict[str, tuple[DataFrame, int]]:
 
 def cc_probe(
     spark, sf_dir: str, factor: int
-) -> tuple[int, float, int, int, float, list[int]]:
+) -> tuple[int, float, float, int, int, float, list[int]]:
     """Probe the iterative operators: connected components over the
     LSH candidate graph of the salted corpus.  The iterations execute
     inside the call (per-round convergence counts), so this is timed
     inline rather than via the noop sink; the edge list is
-    materialized off the clock so the curve measures label
-    propagation, not candidate generation.  Returns (n_edges, sec,
-    rounds, n_components, pagerank_sec, pagerank_deltas_micros —
-    the L1 trajectory captured in a second untimed pass, since delta
-    tracking adds a join+agg job per round)."""
+    materialized off the clock so the curve measures labelling, not
+    candidate generation.  Every probed graph is small enough to
+    finish on the driver, so the call is timed twice: once as shipped
+    (the driver union-find) and once with ``DRIVER_MAX_EDGES`` forced
+    to 0, which measures the distributed label propagation.  Returns
+    (n_edges, sec, distributed_sec, distributed_rounds, n_components,
+    pagerank_sec, pagerank_deltas_micros — the L1 trajectory captured
+    in a second untimed pass, since delta tracking adds a join+agg
+    job per round)."""
+    from etl_based_real_time_air_quality_monitoring_system_spark.operators import graph
     from etl_based_real_time_air_quality_monitoring_system_spark.operators.dedup import minhash_lsh_candidates
-    from etl_based_real_time_air_quality_monitoring_system_spark.operators.graph import connected_components
-
-    from etl_based_real_time_air_quality_monitoring_system_spark.operators.graph import pagerank_micros
 
     docs_s = inflate_docs_salted(load_table(spark, sf_dir, "documents"), factor)
     edges = minhash_lsh_candidates(docs_s, "doc_id", "text", n=3, k=16, bands=4).persist()
     n_edges = edges.count()
-    stats: dict = {}
-    t0 = time.perf_counter()
-    labels = connected_components(edges, "doc_a", "doc_b", stats=stats)
-    n_components = labels.select("component").distinct().count()
-    sec = time.perf_counter() - t0
+
+    def timed_cc() -> tuple[float, int, int]:
+        stats: dict = {}
+        t0 = time.perf_counter()
+        labels = graph.connected_components(edges, "doc_a", "doc_b", stats=stats)
+        n_comp = labels.select("component").distinct().count()
+        return time.perf_counter() - t0, stats["rounds"], n_comp
+
+    sec, _, n_components = timed_cc()
+    shipped_cap = graph.DRIVER_MAX_EDGES
+    graph.DRIVER_MAX_EDGES = 0
+    try:
+        dist_sec, rounds, _ = timed_cc()
+    finally:
+        graph.DRIVER_MAX_EDGES = shipped_cap
     # the OTHER iterative operator over the same materialized edges:
     # 3 synchronous integer-micros PageRank updates, timed end-to-end
     t0 = time.perf_counter()
-    pagerank_micros(edges, "doc_a", "doc_b", iters=3).write.format(
+    graph.pagerank_micros(edges, "doc_a", "doc_b", iters=3).write.format(
         "noop"
     ).mode("overwrite").save()
     pr_sec = time.perf_counter() - t0
@@ -545,12 +557,13 @@ def cc_probe(
     # (the convergence-guard evidence — deltas must fall geometrically
     # and stay volume-independent per vertex)
     pr_stats: dict = {}
-    pagerank_micros(edges, "doc_a", "doc_b", iters=3, stats=pr_stats)
+    graph.pagerank_micros(edges, "doc_a", "doc_b", iters=3, stats=pr_stats)
     edges.unpersist()
     return (
         n_edges,
         sec,
-        stats.get("rounds", 0),
+        dist_sec,
+        rounds,
         n_components,
         pr_sec,
         pr_stats.get("deltas_micros", []),
@@ -599,13 +612,16 @@ def main() -> None:
             rows.append((name, factor, n_in, sec, per_mrow))
             print(f"x{factor:>2} {name:38s} {n_in:>10,} rows {sec:7.2f}s "
                   f"{per_mrow:7.3f} s/Mrow", flush=True)
-        n_edges, sec, rounds, n_comp, pr_sec, pr_deltas = cc_probe(
+        n_edges, sec, dsec, rounds, n_comp, pr_sec, pr_deltas = cc_probe(
             spark, sf_dir, factor
         )
-        cc_rows.append((factor, n_edges, sec, rounds, n_comp, pr_sec, pr_deltas))
+        cc_rows.append(
+            (factor, n_edges, sec, dsec, rounds, n_comp, pr_sec, pr_deltas)
+        )
         print(f"x{factor:>2} {'connected_components(lsh graph)':38s} "
-              f"{n_edges:>10,} edges {sec:7.2f}s rounds={rounds} "
-              f"components={n_comp:,} pr_deltas={pr_deltas}", flush=True)
+              f"{n_edges:>10,} edges {sec:7.2f}s distributed {dsec:7.2f}s "
+              f"rounds={rounds} components={n_comp:,} "
+              f"pr_deltas={pr_deltas}", flush=True)
         bn, b1, b3 = bpe_probe(spark, sf_dir, factor)
         bpe_rows.append((factor, bn, b1, b3))
         print(f"x{factor:>2} {'bpe_word_merges(documents)':38s} "
@@ -745,13 +761,16 @@ def main() -> None:
         # the iterative operators at 64x too: rounds must stay flat
         # (near-clique dup graphs converge in O(1) rounds regardless
         # of volume) and pagerank deltas volume-proportional
-        n_edges, sec, rounds_, n_comp, pr_sec, pr_deltas = cc_probe(
+        n_edges, sec, dsec, rounds_, n_comp, pr_sec, pr_deltas = cc_probe(
             spark, sf_dir, 64
         )
-        cc_rows.append((64, n_edges, sec, rounds_, n_comp, pr_sec, pr_deltas))
+        cc_rows.append(
+            (64, n_edges, sec, dsec, rounds_, n_comp, pr_sec, pr_deltas)
+        )
         print(f"x64 {'connected_components(lsh graph)':38s} "
-              f"{n_edges:>10,} edges {sec:7.2f}s rounds={rounds_} "
-              f"components={n_comp:,} pr_deltas={pr_deltas}", flush=True)
+              f"{n_edges:>10,} edges {sec:7.2f}s distributed {dsec:7.2f}s "
+              f"rounds={rounds_} components={n_comp:,} "
+              f"pr_deltas={pr_deltas}", flush=True)
     out = [
         "# SCALING — measured operator scaling curves",
         "",
@@ -820,16 +839,22 @@ def main() -> None:
         "",
         "## connected_components (the iterative operator)",
         "",
-        "Label propagation + pointer jumping over the MinHash-LSH",
-        "candidate graph of the salted corpus (edge list materialized",
-        "off the clock).  Scale-safe = rounds stay O(log diameter)",
-        "(LSH dup clusters are near-cliques, so 2-3 rounds regardless",
-        "of volume) and sec grows ~linearly with edges; a climbing",
-        "round count would mean the candidate graph is growing long",
-        "chains — raise the band threshold before blaming the",
-        "propagation.  `max_iter` (default 25) is a diameter backstop:",
-        "a path graph of length L needs ~log2(L) rounds, so 25 covers",
-        "any graph that fits in storage.",
+        "Connected components over the MinHash-LSH candidate graph of",
+        "the salted corpus (edge list materialized off the clock).",
+        "Every graph here has fewer undirected edges than",
+        "`graph.DRIVER_MAX_EDGES` (2M), so as shipped the call fetches",
+        "the edges in one job and labels them with a union-find on the",
+        "driver (`cc sec`).  The propagation rounds that larger graphs",
+        "run are timed separately with the cap forced to 0",
+        "(`distributed sec`, `rounds`): label propagation + pointer",
+        "jumping.  Scale-safe = rounds stay O(log diameter) (LSH dup",
+        "clusters are near-cliques, so 2-3 rounds regardless of",
+        "volume) and sec grows ~linearly with edges; a climbing round",
+        "count would mean the candidate graph is growing long chains —",
+        "raise the band threshold before blaming the propagation.",
+        "`max_iter` (default 25) is a diameter backstop: a path graph",
+        "of length L needs ~log2(L) rounds, so 25 covers any graph",
+        "that fits in storage.",
         "",
         "`pagerank_micros` (3 unrolled integer-micros updates) runs",
         "over the SAME materialized edge list: each update is one",
@@ -844,14 +869,14 @@ def main() -> None:
         "under any fixed cap, and the cap stays a backstop exactly",
         "like connected_components' max_iter.",
         "",
-        "| factor | edges | cc sec | cc rounds | components"
+        "| factor | edges | cc sec | distributed sec | rounds | components"
         " | pagerank sec | pr deltas (micros) |",
-        "|---|---|---|---|---|---|---|",
+        "|---|---|---|---|---|---|---|---|",
     ]
-    for factor, n_edges, sec, rounds, n_comp, pr_sec, pr_deltas in cc_rows:
+    for factor, n_edges, sec, dsec, rounds, n_comp, pr_sec, pr_deltas in cc_rows:
         dl = ", ".join(f"{d:,}" for d in pr_deltas)
         out.append(
-            f"| {factor} | {n_edges:,} | {sec:.2f} | {rounds} |"
+            f"| {factor} | {n_edges:,} | {sec:.2f} | {dsec:.2f} | {rounds} |"
             f" {n_comp:,} | {pr_sec:.2f} | {dl} |"
         )
     out += [
