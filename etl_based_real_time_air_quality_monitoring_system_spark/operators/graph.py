@@ -15,17 +15,20 @@ the MapReduce small-star/large-star family (Kiveris et al.,
 before the first round: every shipped input (the dedup candidate
 graph is ~11k edges at sf0.1) takes it, and a graph that is small in
 edges pays one job instead of one job per round plus the per-job
-scheduling overhead that dominated at this size.
+scheduling overhead that dominated at this size.  The labels go back
+through Arrow, so up to Spark's Arrow local-relation threshold
+(48 MB by default) they are a local relation with size statistics,
+and downstream joins plan a broadcast of them up front.
 
 Larger graphs run hash-to-min label propagation with pointer
 jumping.  Each round is two hash-shuffles of the (vertex, label)
 table — join labels onto the edge list and take the min neighbor
 label, then one label-table self-join that short-circuits chains
 (label <- label(label)).  Min-neighbor alone needs O(diameter)
-rounds; the pointer jump short-cuts label chains, though a path whose
-ids are in shuffled order still needs about n/4 rounds (CHANGES.md,
-FOUND).  LSH duplicate clusters are near-cliques (diameter 1-2), so
-in practice 2-3 rounds converge.  The edge set and each round's
+rounds; the pointer jump short-cuts label chains, though an n-vertex
+path whose ids are in shuffled order still needs about n/4 rounds
+(ROADMAP direction 2).  LSH duplicate clusters are near-cliques (diameter
+1-2), so in practice 2-3 rounds converge.  The edge set and each round's
 tables cut lineage with localCheckpoint so per-round plans stay
 O(round body) instead of re-embedding (and re-analyzing) the
 candidate-pair pipeline, and each round runs exactly ONE job: the
@@ -35,20 +38,21 @@ checkpoint (r13).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
 #: Graphs with at most this many undirected edges are labelled on the
-#: driver.  Sized from the crossover table in CHANGES.md: the driver
-#: path wins at every size measured up to 1M edges (by 1.2x on
-#: 2-round near-cliques, 5x on 14-round random graphs), and at the cap
-#: the fetch is 2M id pairs (32 MB of longs) and the driver's Python
-#: process peaked ~400 MB above its baseline.
+#: driver.  Sized from the crossover table in CHANGES.md: up to 1M
+#: edges the driver path is faster than the rounds on near-cliques
+#: (tied at 1M) and ~5x faster on 11-16-round random graphs; at the
+#: cap the fetch is 2M id pairs (32 MB of longs) and the driver's
+#: Python process peaked ~430 MB above its baseline.
 DRIVER_MAX_EDGES = 2_000_000
 
 
-def _min_root_labels(pairs) -> list[tuple]:
-    """(vertex, component) by union-find over (a, b) pairs, linking the
+def _min_root_labels(pairs) -> dict:
+    """{vertex: component} by union-find over (a, b) pairs, linking the
     larger root under the smaller so every root is its component's
     minimum id.  A pair with a NULL endpoint contributes only its
     non-NULL endpoint, as a vertex of its own."""
@@ -71,7 +75,7 @@ def _min_root_labels(pairs) -> list[tuple]:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    return [(v, find(v)) for v in parent]
+    return {v: find(v) for v in parent}
 
 
 def connected_components(
@@ -90,18 +94,19 @@ def connected_components(
     NULL is never a vertex: the non-NULL endpoint of an edge with a
     NULL endpoint is returned as a vertex (its own component unless
     other edges join it), and an all-NULL edge contributes nothing.  A
-    self-loop's vertex is its own component.
+    self-loop adds its vertex and no link, so a vertex whose only edge
+    is a self-loop is its own component.
 
     Graphs with at most ``DRIVER_MAX_EDGES`` undirected edges are
     labelled on the driver by a union-find after one fetch job, and
-    the labels come back as a DataFrame over that driver-side list.
+    the labels come back through Arrow as a local relation.
     Larger graphs run the distributed rounds, one job each.  Both
     paths return the same labels.
 
     Pass a dict as ``stats`` to receive ``{"rounds": r}`` — the number
-    of propagation rounds run before the convergence check fired (the
-    scaling probe reports it; O(log diameter) by the pointer jump).
-    It is 0 when the graph finished on the driver.
+    of propagation rounds run before the convergence check fired, or
+    ``max_iter`` if it never fired (the scaling probe reports it).  It
+    is 0 when the graph finished on the driver.
     """
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # EAGER lineage cut, not persist: a persisted frame keeps its full
@@ -128,12 +133,18 @@ def connected_components(
     if fetched.num_rows <= DRIVER_MAX_EDGES:
         if stats is not None:
             stats["rounds"] = 0
-        pairs = zip(
-            fetched.column("a").to_pylist(), fetched.column("b").to_pylist()
+        roots = _min_root_labels(
+            zip(fetched.column("a").to_pylist(), fetched.column("b").to_pylist())
         )
+        atype = fetched.schema.field("a").type
         vtype = sym.schema["a"].dataType
         return sym.sparkSession.createDataFrame(
-            _min_root_labels(pairs),
+            pa.table(
+                {
+                    "vertex": pa.array(list(roots), atype),
+                    "component": pa.array(list(roots.values()), atype),
+                }
+            ),
             StructType(
                 [StructField("vertex", vtype), StructField("component", vtype)]
             ),

@@ -160,7 +160,7 @@ def _random_graph(seed: int) -> list[tuple[int, int]]:
     must travel far), 4-cliques and random cross links.  Kept small in
     rounds: a shuffled-id chain of n vertices needs about n/4 rounds
     on the distributed path, and each round costs more planning than
-    the last (see CHANGES.md)."""
+    the last (ROADMAP direction 2)."""
     import random
 
     rng = random.Random(seed)
@@ -194,11 +194,16 @@ def _reference_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return label
 
 
-@pytest.mark.parametrize("seed", [3, 4])
-def test_connected_components_paths_agree_on_random_graphs(spark, monkeypatch, seed):
+def test_connected_components_paths_agree_on_random_graphs(spark, monkeypatch):
     from etl_based_real_time_air_quality_monitoring_system_spark.operators import graph
 
-    pairs = _random_graph(seed)
+    # three seeded graphs on disjoint id ranges in one call, so the
+    # distributed path pays its rounds once, not once per seed
+    pairs = [
+        (a + k * 10_000, b + k * 10_000)
+        for k, seed in enumerate((3, 4, 5))
+        for a, b in _random_graph(seed)
+    ]
     edges = spark.createDataFrame(pairs, "src bigint, dst bigint")
     want = _reference_components(pairs)
     driver = {r.vertex: r.component for r in _cc(edges)[0].collect()}

@@ -33,8 +33,7 @@ ITERATIVE = {
     "dedup_clusters": (
         "iterative: edge set fetched in 1 job and labelled by a "
         "driver union-find up to 2M edges, else 2 hash-shuffles + "
-        "1 self-join per round, O(log d) rounds "
-        "(graph.connected_components)"
+        "1 self-join per round (graph.connected_components)"
     ),
     "fuzzy_dedup_corpus": (
         "iterative: connected components (driver union-find up to "

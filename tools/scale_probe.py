@@ -852,9 +852,10 @@ def main() -> None:
         "volume) and sec grows ~linearly with edges; a climbing round",
         "count would mean the candidate graph is growing long chains —",
         "raise the band threshold before blaming the propagation.",
-        "`max_iter` (default 25) is a diameter backstop: a path graph",
-        "of length L needs ~log2(L) rounds, so 25 covers any graph",
-        "that fits in storage.",
+        "`max_iter` (default 25) is a round backstop, not a bound",
+        "that covers every graph: a path whose ids are in shuffled",
+        "order needs about L/4 rounds, and the loop stops at",
+        "`max_iter` without a convergence error (ROADMAP direction 2).",
         "",
         "`pagerank_micros` (3 unrolled integer-micros updates) runs",
         "over the SAME materialized edge list: each update is one",
